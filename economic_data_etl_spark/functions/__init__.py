@@ -1,4 +1,4 @@
-from economic_data_etl_spark.functions.casts import nan_safe_eq, try_double
+from economic_data_etl_spark.functions.casts import nan_safe_eq
 from economic_data_etl_spark.functions.vectors import (
     cosine_similarity,
     dot_product,
@@ -7,7 +7,6 @@ from economic_data_etl_spark.functions.vectors import (
 
 __all__ = [
     "nan_safe_eq",
-    "try_double",
     "cosine_similarity",
     "dot_product",
     "l2_norm",

@@ -1,4 +1,4 @@
-"""Cast and comparison helpers (SURVEY.md §2.8 F2, F6).
+"""Timestamp arithmetic and comparison helpers (SURVEY.md §2.8 F6).
 
 All JVM-side column expressions — no UDFs.
 """
@@ -7,17 +7,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def try_double(col: Column | str) -> Column:
-    """Lenient string→double: non-numeric (e.g. FRED "." / BLS "-") → NULL.
-
-    Parity with `pd.to_numeric(errors="coerce")` (reference
-    src/transform.py:24,62). Uses try_cast so behavior is identical whether
-    or not spark.sql.ansi.enabled is set.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast("double")
 
 
 def ts_diff_seconds(start: Column | str, end: Column | str) -> Column:

@@ -1,4 +1,4 @@
-"""Set-oriented upsert with per-row outcome classification.
+"""The one MERGE: per-row outcome classification plus its stats.
 
 Reference parity: `upsert_observations` / `upsert_dim_series`
 (reference src/load.py:42-134) classify each incoming row as
@@ -7,97 +7,50 @@ changes, and report a stats dict. The reference loads the whole table
 into a Python dict and loops (src/load.py:55-77) — explicitly flagged
 there as non-scalable (src/load.py:121-122).
 
-Spark-first design: ONE full-outer join on the key, `when/otherwise`
-classification with NaN-safe epsilon equality, and a staged atomic
-rewrite of the target. The join shuffles both sides on the key once;
-with the target bucketed by key (or Delta + MERGE where available) even
-that shuffle disappears on the existing side. Stats come from a
-`groupBy(status).count()` — no driver-side row loop at any size.
+Spark-first design: `merge_with_status` is the only classifier. It
+dedups the batch deterministically, then runs ONE full-outer join on the
+key with `when/otherwise` classification and NaN-safe epsilon equality.
+`observed_merge` hangs the outcome counts on that lineage with
+`observe()`, so the stats ride the write that applies the merge — no
+second job. Every store calls it exactly once: the parquet fact and dim
+tables here (`upsert_parquet`, one staged rewrite protocol for both) and
+the JDBC sink (sources/jdbc.py). An empty `compare_cols` is the
+insert-only (dim) mode: a matched key is unchanged and keeps its stored
+row.
 """
 
 from __future__ import annotations
 
 import functools
-from dataclasses import dataclass
+import logging
+from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from economic_data_etl_spark.functions.casts import nan_safe_eq
 
+logger = logging.getLogger(__name__)
+
 STATUS_COL = "__change_status"
+DROPPED_COL = "__dup_dropped"  # batch rows dropped for this key as duplicates
 INSERTED, UPDATED, UNCHANGED = "inserted", "updated", "unchanged"
-
-
-@dataclass(frozen=True)
-class UpsertResult:
-    merged: DataFrame  # post-merge content of the target
-    stats: dict[str, int]  # {"inserted": n, "updated": n, "unchanged": n}
-
-
-def classify_upsert(
-    existing: DataFrame,
-    incoming: DataFrame,
-    keys: list[str],
-    compare_cols: list[str],
-    eps: float = 1e-9,
-) -> DataFrame:
-    """Incoming rows + STATUS_COL ∈ {inserted, updated, unchanged}.
-
-    A row is `unchanged` when every compare column is NaN-safe-epsilon
-    equal (reference src/load.py:27-35,64-77); `inserted` when the key is
-    absent from `existing`.
-    """
-    ex = existing.select(
-        *[F.col(k).alias(f"__ex_{k}") for k in keys],
-        *[F.col(c).alias(f"__ex_{c}") for c in compare_cols],
-        F.lit(1).alias("__ex_present"),
-    )
-    cond = functools.reduce(
-        Column.__and__, [incoming[k] == ex[f"__ex_{k}"] for k in keys]
-    )
-    joined = incoming.join(ex, cond, "left")
-
-    numeric = {
-        f.name
-        for f in incoming.schema.fields
-        if f.dataType.typeName()
-        in ("double", "float", "decimal", "integer", "long", "short", "byte")
-    }
-
-    def col_equal(c: str) -> Column:
-        if c in numeric:  # epsilon tolerance only makes sense for numbers
-            return nan_safe_eq(F.col(c), F.col(f"__ex_{c}"), eps)
-        return F.col(c).eqNullSafe(F.col(f"__ex_{c}"))
-
-    all_equal = functools.reduce(Column.__and__, [col_equal(c) for c in compare_cols])
-    status = (
-        F.when(F.col("__ex_present").isNull(), INSERTED)
-        .when(all_equal, UNCHANGED)
-        .otherwise(UPDATED)
-    )
-    return joined.withColumn(STATUS_COL, status).select(*incoming.columns, STATUS_COL)
-
-
-def upsert_stats(classified: DataFrame) -> dict[str, int]:
-    counts = {
-        r[STATUS_COL]: r["n"]
-        for r in classified.groupBy(STATUS_COL).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    return {s: int(counts.get(s, 0)) for s in (INSERTED, UPDATED, UNCHANGED)}
-
-
-def merge_tables(
-    existing: DataFrame, incoming: DataFrame, keys: list[str]
-) -> DataFrame:
-    """Post-merge target: incoming wins on key collision, existing rows
-    without a matching incoming key are retained (anti-join + union —
-    exactly MERGE WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT)."""
-    retained = existing.join(incoming.select(*keys), keys, "left_anti")
-    return retained.unionByName(incoming.select(*existing.columns))
-
-
 RETAINED = "retained"  # existing-only rows; kept, never counted in stats
+
+
+def _dedup(incoming: DataFrame, keys: list[str]) -> DataFrame:
+    """One row per key. The survivor is chosen by value — the max of the
+    non-key columns as a struct — so it does not depend on how the batch
+    is partitioned (dropDuplicates keeps an arbitrary row). The
+    reference's SQL primary key would reject such a batch outright."""
+    rest = [c for c in incoming.columns if c not in keys]
+    best = incoming.groupBy(*keys).agg(
+        F.max(F.struct(*rest)).alias("__row"),
+        (F.count(F.lit(1)) - 1).alias(DROPPED_COL),
+    )
+    return best.select(
+        *keys, *[F.col("__row")[c].alias(c) for c in rest], DROPPED_COL
+    )
 
 
 def merge_with_status(
@@ -108,16 +61,19 @@ def merge_with_status(
     eps: float = 1e-9,
 ) -> DataFrame:
     """ONE full-outer join producing the merged target content plus
-    STATUS_COL ∈ {inserted, updated, unchanged, retained}.
+    STATUS_COL ∈ {inserted, updated, unchanged, retained} and
+    DROPPED_COL (duplicate batch rows dropped for the key; NULL on
+    retained rows).
 
-    This is the single-pass MERGE shape: each side is scanned once,
-    shuffled on the key once; the merged row takes incoming values when
-    present, existing otherwise. Stats can ride along with the write via
-    observe() — no second job (see upsert_parquet).
+    A row is `unchanged` when every compare column is NaN-safe-epsilon
+    equal (reference src/load.py:27-35,64-77) — with no compare columns,
+    every matched key is; `inserted` when the key is absent from
+    `existing`. Each side is scanned once and shuffled on the key once.
     """
     all_cols = existing.columns
-    inc = incoming.select(
+    inc = _dedup(incoming, keys).select(
         *[F.col(c).alias(f"__in_{c}") for c in all_cols],
+        F.col(DROPPED_COL),
         F.lit(1).alias("__in_present"),
     )
     ex = existing.select(
@@ -137,11 +93,13 @@ def merge_with_status(
     }
 
     def col_equal(c: str) -> Column:
-        if c in numeric:
+        if c in numeric:  # epsilon tolerance only makes sense for numbers
             return nan_safe_eq(F.col(f"__in_{c}"), F.col(f"__ex_{c}"), eps)
         return F.col(f"__in_{c}").eqNullSafe(F.col(f"__ex_{c}"))
 
-    all_equal = functools.reduce(Column.__and__, [col_equal(c) for c in compare_cols])
+    all_equal = functools.reduce(
+        Column.__and__, [col_equal(c) for c in compare_cols], F.lit(True)
+    )
     status = (
         F.when(F.col("__ex_present").isNull(), INSERTED)
         .when(F.col("__in_present").isNull(), RETAINED)
@@ -164,24 +122,41 @@ def merge_with_status(
         .alias(c)
         for c in all_cols
     ]
-    return joined.select(*merged_cols, status.alias(STATUS_COL))
+    return joined.select(*merged_cols, status.alias(STATUS_COL), DROPPED_COL)
 
 
-def upsert(
+def observed_merge(
     existing: DataFrame,
     incoming: DataFrame,
     keys: list[str],
     compare_cols: list[str],
     eps: float = 1e-9,
-) -> UpsertResult:
-    """Two-job convenience form (stats action + merged lineage). For the
-    one-job write path use upsert_parquet, which rides the stats on the
-    write via observe()."""
-    classified = classify_upsert(existing, incoming, keys, compare_cols, eps)
-    return UpsertResult(
-        merged=merge_tables(existing, incoming, keys),
-        stats=upsert_stats(classified),
+) -> tuple[DataFrame, Callable[[], dict[str, int]]]:
+    """`merge_with_status` with its outcome counts observed on the same
+    lineage. Returns the merged frame (STATUS_COL and DROPPED_COL still
+    attached, for the caller to filter on and drop) and a function that
+    reads the stats once an action over that frame has run:
+    {inserted, updated, unchanged}, or {inserted, unchanged} in
+    insert-only mode (reference src/load.py:134)."""
+    merged = merge_with_status(existing, incoming, keys, compare_cols, eps)
+    outcomes = (INSERTED, UPDATED, UNCHANGED) if compare_cols else (INSERTED, UNCHANGED)
+    obs = Observation()
+    observed = merged.observe(
+        obs,
+        *[F.count(F.when(F.col(STATUS_COL) == s, 1)).alias(s) for s in outcomes],
+        F.coalesce(F.sum(DROPPED_COL), F.lit(0)).alias(DROPPED_COL),
     )
+
+    def stats() -> dict[str, int]:
+        got = obs.get
+        if got[DROPPED_COL]:
+            logger.warning(
+                "upsert dropped %d duplicate-key batch rows (kept the max row per key)",
+                got[DROPPED_COL],
+            )
+        return {s: int(got[s]) for s in outcomes}
+
+    return observed, stats
 
 
 def upsert_parquet(
@@ -203,44 +178,15 @@ def upsert_parquet(
     import os
     import shutil
 
-    from pyspark.sql import Observation
-
     if os.path.exists(target_path):
         existing = spark.read.parquet(target_path)
     else:
         existing = spark.createDataFrame([], incoming.schema)
 
-    # A batch with duplicate keys would fan out against the existing row
-    # and write duplicate target rows (the reference's SQL PK would reject
-    # the batch outright). Keep one arbitrary survivor per key — callers
-    # needing last-write-wins should pre-aggregate with an ordering column.
-    incoming = incoming.dropDuplicates(keys)
-
-    merged = merge_with_status(existing, incoming, keys, compare_cols, eps)
-    obs = Observation()
-    observed = merged.observe(
-        obs,
-        *[
-            F.count(F.when(F.col(STATUS_COL) == s, 1)).alias(s)
-            for s in (INSERTED, UPDATED, UNCHANGED)
-        ],
-    ).drop(STATUS_COL)
-
+    merged, stats = observed_merge(existing, incoming, keys, compare_cols, eps)
     staging = f"{target_path}.staging"
-    observed.write.mode("overwrite").parquet(staging)
+    merged.drop(STATUS_COL, DROPPED_COL).write.mode("overwrite").parquet(staging)
     if os.path.exists(target_path):
         shutil.rmtree(target_path)
     os.rename(staging, target_path)
-    got = obs.get
-    return {s: int(got[s]) for s in (INSERTED, UPDATED, UNCHANGED)}
-
-
-def insert_missing(
-    existing: DataFrame, incoming: DataFrame, keys: list[str]
-) -> tuple[DataFrame, dict[str, int]]:
-    """Dim-table insert-only upsert (reference src/load.py:108-134):
-    anti-join picks rows whose key is new; stats = {inserted, unchanged}."""
-    new_rows = incoming.join(existing.select(*keys), keys, "left_anti")
-    n_new = new_rows.count()
-    n_total = incoming.count()
-    return new_rows, {"inserted": int(n_new), "unchanged": int(n_total - n_new)}
+    return stats()

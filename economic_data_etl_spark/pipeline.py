@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from economic_data_etl_spark import config
 from economic_data_etl_spark.operators import upsert as U
-from economic_data_etl_spark.schemas import DIM_SCHEMA, FACT_SCHEMA
 from economic_data_etl_spark.sources.bls import build_dim_series, parse_bls_batch
 from economic_data_etl_spark.sources.fred import parse_fred_observations
 from economic_data_etl_spark.sources.transforms import combine_fact_tables
@@ -101,7 +100,8 @@ def run_pipeline(
 
 def parquet_stores(spark: SparkSession, warehouse_dir: str):
     """Default plain-parquet stores: full upsert for the fact table,
-    insert-only for the dim table (reference src/load.py:42-134 semantics)."""
+    insert-only for the dim table (reference src/load.py:42-134
+    semantics). Both go through the same merge and staged rewrite."""
     fact_path = f"{warehouse_dir}/fact_economic_observations"
     dim_path = f"{warehouse_dir}/dim_series"
 
@@ -109,15 +109,6 @@ def parquet_stores(spark: SparkSession, warehouse_dir: str):
         return U.upsert_parquet(spark, df, fact_path, keys, compare)
 
     def dim_store(df: DataFrame, keys: list[str], compare: list[str]) -> dict[str, int]:
-        import os
-
-        if os.path.exists(dim_path):
-            existing = spark.read.parquet(dim_path)
-        else:
-            existing = spark.createDataFrame([], DIM_SCHEMA)
-        new_rows, stats = U.insert_missing(existing, df, keys)
-        if stats["inserted"]:
-            new_rows.write.mode("append").parquet(dim_path)
-        return stats
+        return U.upsert_parquet(spark, df, dim_path, keys, compare_cols=[])
 
     return fact_store, dim_store

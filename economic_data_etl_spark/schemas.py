@@ -44,58 +44,6 @@ DIM_SCHEMA = StructType(
 )
 DIM_COLUMNS = [f.name for f in DIM_SCHEMA.fields]
 
-# --- Raw API payload schemas (bronze layer) --------------------------------
-# FRED observations response (reference src/extract.py:92-95, fixture
-# tests/conftest.py:55-80). Only the fields we consume are declared; the
-# parser projects to (date, value) anyway (reference src/transform.py:21).
-RAW_FRED_OBSERVATION = StructType(
-    [
-        StructField("realtime_start", StringType(), True),
-        StructField("realtime_end", StringType(), True),
-        StructField("date", StringType(), False),
-        StructField("value", StringType(), True),  # "." encodes missing
-    ]
-)
-RAW_FRED_SCHEMA = StructType(
-    [
-        StructField("realtime_start", StringType(), True),
-        StructField("realtime_end", StringType(), True),
-        StructField("observation_start", StringType(), True),
-        StructField("observation_end", StringType(), True),
-        StructField("units", StringType(), True),
-        StructField("count", LongType(), True),
-        StructField("observations", ArrayType(RAW_FRED_OBSERVATION), True),
-    ]
-)
-
-# BLS v2 batch response (reference src/extract.py:153-156, fixture
-# tests/conftest.py:83-114).
-RAW_BLS_DATAPOINT = StructType(
-    [
-        StructField("year", StringType(), False),
-        StructField("period", StringType(), False),  # "M01".."M13","Q01".."S03"
-        StructField("periodName", StringType(), True),
-        StructField("value", StringType(), True),  # "-" encodes missing
-    ]
-)
-RAW_BLS_SERIES = StructType(
-    [
-        StructField("seriesID", StringType(), False),
-        StructField("data", ArrayType(RAW_BLS_DATAPOINT), True),
-    ]
-)
-RAW_BLS_SCHEMA = StructType(
-    [
-        StructField("status", StringType(), True),
-        StructField("responseTime", LongType(), True),
-        StructField(
-            "Results",
-            StructType([StructField("series", ArrayType(RAW_BLS_SERIES), True)]),
-            True,
-        ),
-    ]
-)
-
 # Ingest state table (reference metadata JSON, src/extract.py:26-39).
 INGEST_STATE_SCHEMA = StructType(
     [

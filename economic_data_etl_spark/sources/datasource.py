@@ -2,10 +2,10 @@
 bronze snapshot layer.
 
 `spark.read.format("economic_snapshots").load(dir)` turns a directory of
-raw FRED/BLS JSON snapshots (written by sources/ingest.py) into fact rows
-with the same semantics as the explicit parsers (fred.py / bls.py):
-"."/"-" → NULL, M13/quarterly periods dropped, registry name mapping with
-id fallback.
+raw FRED/BLS JSON snapshots (written by sources/ingest.py) into fact rows.
+It has no parser of its own: each file is handed to the same row parsers
+the in-memory path uses (`fred.fred_rows`, `bls.bls_rows`), with the
+registry name mapping and id fallback of `config`.
 
 Scale shape: one input partition per snapshot file, so a directory of
 thousands of snapshots parses fully in parallel with no driver
@@ -16,7 +16,6 @@ first-class Spark source instead of driver-side plumbing.
 from __future__ import annotations
 
 import json
-from datetime import date
 from pathlib import Path
 
 from pyspark.sql.datasource import (
@@ -27,19 +26,9 @@ from pyspark.sql.datasource import (
 )
 
 from economic_data_etl_spark import config
-
-FACT_DDL = (
-    "series_id string, series_name string, date date, value double, source string"
-)
-
-
-def _try_float(raw: str | None) -> float | None:
-    if raw is None:
-        return None
-    try:
-        return float(raw)
-    except ValueError:  # "." (FRED) / "-" (BLS) / any junk → NULL
-        return None
+from economic_data_etl_spark.schemas import FACT_SCHEMA
+from economic_data_etl_spark.sources.bls import bls_rows
+from economic_data_etl_spark.sources.fred import fred_rows
 
 
 class SnapshotPartition(InputPartition):
@@ -64,41 +53,12 @@ class SnapshotReader(DataSourceReader):
         source, rest = path.stem.split("_", 1)
         identifier = rest.rsplit("_", 3)[0]
         if source == "FRED":
-            yield from self._read_fred(payload, identifier)
+            id_to_name = {v: k for k, v in config.FRED_SERIES.items()}
+            yield from fred_rows(payload, identifier, id_to_name.get(identifier, identifier))
         elif source == "BLS":
-            yield from self._read_bls(payload)
+            yield from bls_rows(payload, {v: k for k, v in config.BLS_SERIES.items()})
         else:
             raise ValueError(f"unknown snapshot source {source!r} in {path.name}")
-
-    def _read_fred(self, payload: dict, series_id: str):
-        id_to_name = {v: k for k, v in config.FRED_SERIES.items()}
-        name = id_to_name.get(series_id, series_id)
-        for obs in payload.get("observations", []):
-            yield (
-                series_id,
-                name,
-                date.fromisoformat(obs["date"]),
-                _try_float(obs.get("value")),
-                "FRED",
-            )
-
-    def _read_bls(self, payload: dict):
-        id_to_name = {v: k for k, v in config.BLS_SERIES.items()}
-        for series in payload.get("Results", {}).get("series", []):
-            sid = series["seriesID"]
-            name = id_to_name.get(sid, sid)
-            for point in series.get("data", []):
-                period = point.get("period", "")
-                # monthly grain only (M13 = annual average, Q/S = other grains)
-                if not period.startswith("M") or period == "M13":
-                    continue
-                yield (
-                    sid,
-                    name,
-                    date(int(point["year"]), int(period[1:]), 1),
-                    _try_float(point.get("value")),
-                    "BLS",
-                )
 
 
 class SnapshotStreamReader(DataSourceStreamReader):
@@ -146,8 +106,8 @@ class SnapshotDataSource(DataSource):
     def name(cls) -> str:
         return "economic_snapshots"
 
-    def schema(self) -> str:
-        return FACT_DDL
+    def schema(self):
+        return FACT_SCHEMA
 
     def reader(self, schema) -> SnapshotReader:
         return SnapshotReader(self.options)

@@ -7,14 +7,18 @@ same contract — ``upsert_observations``-style stats
 ``{inserted, updated, unchanged}`` and an insert-only dim path — runs
 through ``spark.read/write.format("jdbc")``:
 
-- **Read** existing rows with column pruning pushed to the database
-  (only key + compare columns cross the wire).
-- **Classify** with the set-oriented join in ``operators.upsert``
-  (one shuffle, no driver-side row loop at any size).
-- **Apply** via a staged temp table + two set-based statements
-  (DELETE matching keys, INSERT from stage) in one transaction —
-  the relational equivalent of MERGE that works on every mainstream
-  JDBC dialect, instead of per-row UPDATE round-trips.
+- **Read** existing rows with the incoming columns only.
+- **Classify** with the engine's one merge,
+  ``operators.upsert.merge_with_status`` (one shuffle, no driver-side
+  row loop at any size), run once per call: its stats are observed on
+  the stage write.
+- **Apply** via a staged temp table holding only inserted/updated rows
+  + two set-based statements (DELETE matching keys, INSERT from stage)
+  in one transaction — the relational equivalent of MERGE that works on
+  every mainstream JDBC dialect, instead of per-row UPDATE round-trips.
+  The statements are skipped when nothing changed. The insert-only
+  (dim) mode never replaces a row, so it appends its new rows to the
+  target directly.
 
 At 100 TB the database side is the bottleneck by construction (JDBC
 targets hold dimension/fact summaries, not the raw corpus); the Spark
@@ -31,12 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from economic_data_etl_spark.operators.upsert import (
+    DROPPED_COL,
     INSERTED,
     STATUS_COL,
-    UNCHANGED,
-    classify_upsert,
-    insert_missing,
-    upsert_stats,
+    UPDATED,
+    observed_merge,
 )
 
 
@@ -115,7 +118,7 @@ def jdbc_read(
 ) -> DataFrame:
     df = spark.read.format("jdbc").option("url", url).option("dbtable", table).load()
     # Derby/Postgres fold unquoted DDL identifiers to their native case;
-    # normalize to lowercase so callers and classify_upsert see one casing
+    # normalize to lowercase so callers and the merge see one casing
     df = df.toDF(*[c.lower() for c in df.columns])
     return df.select(*columns) if columns else df
 
@@ -156,17 +159,26 @@ def jdbc_upsert(
     Returns {"inserted": n, "updated": n, "unchanged": n} with the
     reference's semantics: key present + NaN-safe-epsilon-equal compare
     columns → unchanged; present but different → updated; absent →
-    inserted. Unchanged rows are never rewritten.
+    inserted. Unchanged rows are never rewritten. With no compare
+    columns the upsert is insert-only and returns {"inserted",
+    "unchanged"}.
     """
-    existing = jdbc_read(spark, url, table, columns=keys + compare_cols)
-    incoming = incoming.dropDuplicates(keys)
-    classified = classify_upsert(existing, incoming, keys, compare_cols, eps)
-    stats = upsert_stats(classified)
+    existing = jdbc_read(spark, url, table, columns=incoming.columns)
+    merged, merge_stats = observed_merge(existing, incoming, keys, compare_cols, eps)
+    changed = merged.filter(F.col(STATUS_COL).isin(INSERTED, UPDATED)).drop(
+        STATUS_COL, DROPPED_COL
+    )
+    if not compare_cols:
+        # insert-only: no stored row is ever replaced, so the new rows
+        # append straight to the target — no stage, no DELETE
+        jdbc_append(changed, url, table)
+        return merge_stats()
 
-    changed = classified.filter(F.col(STATUS_COL) != UNCHANGED).drop(STATUS_COL)
-    if stats[INSERTED] or stats["updated"]:
-        stage = f"{table}_stage"
-        jdbc_append(changed, url, stage, mode="overwrite", create_types=create_types)
+    stage = f"{table}_stage"
+    jdbc_append(changed, url, stage, mode="overwrite", create_types=create_types)
+    stats = merge_stats()
+    apply = []
+    if stats[INSERTED] or stats[UPDATED]:
         # Key indexes on BOTH sides of the apply join: whichever
         # direction Derby's optimizer probes, the inner lookup is an
         # index seek instead of a row-locked full rescan (see
@@ -182,16 +194,12 @@ def jdbc_upsert(
         # CREATE, so both fold to the dialect's native case).
         key_match = " AND ".join(f't."{k}" = s."{k}"' for k in keys)
         quoted = ", ".join(f'"{c}"' for c in incoming.columns)
-        execute_statements(
-            spark,
-            url,
-            [
-                f"DELETE FROM {table} t WHERE EXISTS "
-                f"(SELECT 1 FROM {stage} s WHERE {key_match})",
-                f"INSERT INTO {table} ({quoted}) SELECT {quoted} FROM {stage}",
-                f"DROP TABLE {stage}",
-            ],
-        )
+        apply = [
+            f"DELETE FROM {table} t WHERE EXISTS "
+            f"(SELECT 1 FROM {stage} s WHERE {key_match})",
+            f"INSERT INTO {table} ({quoted}) SELECT {quoted} FROM {stage}",
+        ]
+    execute_statements(spark, url, [*apply, f"DROP TABLE {stage}"])
     return stats
 
 
@@ -250,22 +258,7 @@ def jdbc_stores(spark: SparkSession, url: str):
         )
 
     def dim_store(df: DataFrame, keys: list[str], compare: list[str]) -> dict[str, int]:
-        return jdbc_insert_missing(spark, df, url, "dim_series", keys)
+        # insert-only, the reference's upsert_dim_series (src/load.py:108-134)
+        return jdbc_upsert(spark, df, url, "dim_series", keys, compare_cols=[])
 
     return fact_store, dim_store
-
-
-def jdbc_insert_missing(
-    spark: SparkSession,
-    incoming: DataFrame,
-    url: str,
-    table: str,
-    keys: list[str],
-) -> dict[str, int]:
-    """Reference ``upsert_dim_series`` (src/load.py:108-134): insert
-    keys not yet present; existing rows are never overwritten."""
-    existing = jdbc_read(spark, url, table, columns=keys)
-    new_rows, stats = insert_missing(existing, incoming.dropDuplicates(keys), keys)
-    if stats[INSERTED]:
-        jdbc_append(new_rows, url, table, mode="append")
-    return stats

@@ -9,7 +9,6 @@ import pytest
 
 from economic_data_etl_spark.sources.jdbc import (
     ensure_table,
-    jdbc_insert_missing,
     jdbc_read,
     jdbc_upsert,
     table_exists,
@@ -177,13 +176,13 @@ class TestJdbcDimInsert:
             [("FEDFUNDS", "Fed Funds Rate", "FRED"), ("UNRATE", "Unemployment", "FRED")],
             "series_id string, series_name string, source string",
         )
-        stats = jdbc_insert_missing(spark, dims, derby_url, DIM, ["series_id"])
+        stats = jdbc_upsert(spark, dims, derby_url, DIM, ["series_id"], compare_cols=[])
         assert stats == {"inserted": 2, "unchanged": 0}
         renamed = spark.createDataFrame(
             [("FEDFUNDS", "RENAMED", "FRED"), ("GDP", "Real GDP", "FRED")],
             "series_id string, series_name string, source string",
         )
-        stats = jdbc_insert_missing(spark, renamed, derby_url, DIM, ["series_id"])
+        stats = jdbc_upsert(spark, renamed, derby_url, DIM, ["series_id"], compare_cols=[])
         assert stats == {"inserted": 1, "unchanged": 1}
         got = {
             r["series_id"]: r["series_name"]
@@ -192,3 +191,17 @@ class TestJdbcDimInsert:
         # existing metadata is stable: the rename was ignored
         assert got["FEDFUNDS"] == "Fed Funds Rate"
         assert got["GDP"] == "Real GDP"
+
+
+class TestJdbcDuplicateKeys:
+    def test_duplicate_batch_key_keeps_max_row(self, spark, derby_url):
+        """The JDBC sink shares the parquet store's merge, so it shares
+        its deterministic duplicate-key rule too."""
+        dup = [
+            ("UNRATE", "2024-01-01", 3.9, "Unemployment Rate", "FRED"),
+            ("UNRATE", "2024-01-01", 3.7, "Unemployment Rate", "FRED"),
+        ]
+        stats = _upsert(spark, derby_url, dup)
+        assert stats == {"inserted": 1, "updated": 0, "unchanged": 0}
+        (row,) = jdbc_read(spark, derby_url, FACT).collect()
+        assert row["value"] == pytest.approx(3.9)

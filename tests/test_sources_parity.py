@@ -8,11 +8,7 @@ import datetime
 import pytest
 
 from economic_data_etl_spark.schemas import FACT_COLUMNS
-from economic_data_etl_spark.sources.bls import (
-    bls_batch_df,
-    build_dim_series,
-    parse_bls_batch,
-)
+from economic_data_etl_spark.sources.bls import build_dim_series, parse_bls_batch
 from economic_data_etl_spark.sources.fred import parse_fred_observations
 from economic_data_etl_spark.sources.transforms import combine_fact_tables
 from tests.fixtures_ref import BLS_SERIES_MAP, RAW_BLS_JSON, RAW_FRED_JSON
@@ -97,7 +93,7 @@ class TestParseBls:
 
     def test_bad_status_raises(self, spark):
         with pytest.raises(RuntimeError, match="REQUEST_NOT_PROCESSED"):
-            bls_batch_df(spark, {"status": "REQUEST_NOT_PROCESSED"})
+            parse_bls_batch(spark, {"status": "REQUEST_NOT_PROCESSED"}, BLS_SERIES_MAP)
 
 
 # --- dim build (reference tests/test_transform.py:131-157) ----------------

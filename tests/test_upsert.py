@@ -1,13 +1,15 @@
 """Upsert operator parity tests (reference tests/test_load.py:12-161):
 insert/update/unchanged stats triple, NaN-safe epsilon equality, rerun
-idempotency, insert-only dim semantics, staged parquet rewrite."""
+idempotency, insert-only dim semantics, deterministic duplicate keys,
+staged parquet rewrite — all through the production store,
+`upsert_parquet`."""
 
 from __future__ import annotations
 
 import datetime
+import logging
 
 from economic_data_etl_spark.operators import upsert as U
-from economic_data_etl_spark.schemas import FACT_SCHEMA
 
 KEYS = ["series_id", "date"]
 COMPARE = ["value", "series_name", "source"]
@@ -23,84 +25,116 @@ def _fact(spark, rows):
     )
 
 
-def _empty(spark):
-    return spark.createDataFrame([], FACT_SCHEMA)
+def _stored(spark, target):
+    return {r["date"]: r["value"] for r in spark.read.parquet(target).collect()}
 
 
 class TestUpsertStats:
-    def test_fresh_insert(self, spark):
+    def test_fresh_insert(self, spark, tmp_path):
+        target = str(tmp_path / "t")
         incoming = _fact(spark, [("U", "2023-01-01", 3.4), ("U", "2023-02-01", None)])
-        res = U.upsert(_empty(spark), incoming, KEYS, COMPARE)
-        assert res.stats == {"inserted": 2, "updated": 0, "unchanged": 0}
-        assert res.merged.count() == 2
+        stats = U.upsert_parquet(spark, incoming, target, KEYS, COMPARE)
+        assert stats == {"inserted": 2, "updated": 0, "unchanged": 0}
+        assert spark.read.parquet(target).count() == 2
 
-    def test_rerun_is_unchanged(self, spark):
+    def test_rerun_is_unchanged(self, spark, tmp_path):
+        target = str(tmp_path / "t")
         batch = _fact(
             spark,
             [("U", "2023-01-01", 3.4), ("U", "2023-02-01", None), ("U", "2023-03-01", 3.6)],
         )
-        first = U.upsert(_empty(spark), batch, KEYS, COMPARE)
-        second = U.upsert(first.merged, batch, KEYS, COMPARE)
-        assert second.stats == {"inserted": 0, "updated": 0, "unchanged": 3}
-        assert second.merged.count() == 3  # no duplicate rows
+        U.upsert_parquet(spark, batch, target, KEYS, COMPARE)
+        stats = U.upsert_parquet(spark, batch, target, KEYS, COMPARE)
+        assert stats == {"inserted": 0, "updated": 0, "unchanged": 3}
+        assert spark.read.parquet(target).count() == 3  # no duplicate rows
 
-    def test_revision_updates_in_place(self, spark):
+    def test_revision_updates_in_place(self, spark, tmp_path):
+        target = str(tmp_path / "t")
         v1 = _fact(spark, [("U", "2023-01-01", 3.4), ("U", "2023-02-01", 3.5)])
-        state = U.upsert(_empty(spark), v1, KEYS, COMPARE).merged
+        U.upsert_parquet(spark, v1, target, KEYS, COMPARE)
         v2 = _fact(spark, [("U", "2023-01-01", 9.9), ("U", "2023-02-01", 3.5)])
-        res = U.upsert(state, v2, KEYS, COMPARE)
-        assert res.stats == {"inserted": 0, "updated": 1, "unchanged": 1}
-        merged = {r["date"]: r["value"] for r in res.merged.collect()}
-        assert merged[datetime.date(2023, 1, 1)] == 9.9
+        stats = U.upsert_parquet(spark, v2, target, KEYS, COMPARE)
+        assert stats == {"inserted": 0, "updated": 1, "unchanged": 1}
+        assert _stored(spark, target)[datetime.date(2023, 1, 1)] == 9.9
 
-    def test_partial_stats_triple(self, spark):
+    def test_partial_stats_triple(self, spark, tmp_path):
         # 1 inserted, 2 updated, 0 unchanged (reference tests/test_load.py:98-123)
+        target = str(tmp_path / "t")
         v1 = _fact(spark, [("U", "2023-01-01", 1.0), ("U", "2023-02-01", 2.0)])
-        state = U.upsert(_empty(spark), v1, KEYS, COMPARE).merged
+        U.upsert_parquet(spark, v1, target, KEYS, COMPARE)
         v2 = _fact(
             spark,
             [("U", "2023-01-01", 1.5), ("U", "2023-02-01", 2.5), ("U", "2023-03-01", 3.0)],
         )
-        res = U.upsert(state, v2, KEYS, COMPARE)
-        assert res.stats == {"inserted": 1, "updated": 2, "unchanged": 0}
+        stats = U.upsert_parquet(spark, v2, target, KEYS, COMPARE)
+        assert stats == {"inserted": 1, "updated": 2, "unchanged": 0}
 
 
 class TestNanSafeEquality:
-    def test_null_vs_null_unchanged(self, spark):
+    def test_null_vs_null_unchanged(self, spark, tmp_path):
+        target = str(tmp_path / "t")
         batch = _fact(spark, [("U", "2023-01-01", None)])
-        state = U.upsert(_empty(spark), batch, KEYS, COMPARE).merged
-        res = U.upsert(state, batch, KEYS, COMPARE)
-        assert res.stats["unchanged"] == 1
+        U.upsert_parquet(spark, batch, target, KEYS, COMPARE)
+        stats = U.upsert_parquet(spark, batch, target, KEYS, COMPARE)
+        assert stats["unchanged"] == 1
 
-    def test_null_to_value_is_update(self, spark):
-        state = U.upsert(
-            _empty(spark), _fact(spark, [("U", "2023-01-01", None)]), KEYS, COMPARE
-        ).merged
-        res = U.upsert(state, _fact(spark, [("U", "2023-01-01", 3.4)]), KEYS, COMPARE)
-        assert res.stats["updated"] == 1
-
-    def test_epsilon_tolerance(self, spark):
-        state = U.upsert(
-            _empty(spark), _fact(spark, [("U", "2023-01-01", 3.4)]), KEYS, COMPARE
-        ).merged
-        res = U.upsert(
-            state, _fact(spark, [("U", "2023-01-01", 3.4 + 1e-12)]), KEYS, COMPARE
+    def test_null_to_value_is_update(self, spark, tmp_path):
+        target = str(tmp_path / "t")
+        U.upsert_parquet(spark, _fact(spark, [("U", "2023-01-01", None)]), target, KEYS, COMPARE)
+        stats = U.upsert_parquet(
+            spark, _fact(spark, [("U", "2023-01-01", 3.4)]), target, KEYS, COMPARE
         )
-        assert res.stats["unchanged"] == 1  # |Δ| < 1e-9 counts as equal
+        assert stats["updated"] == 1
+
+    def test_epsilon_tolerance(self, spark, tmp_path):
+        target = str(tmp_path / "t")
+        U.upsert_parquet(spark, _fact(spark, [("U", "2023-01-01", 3.4)]), target, KEYS, COMPARE)
+        stats = U.upsert_parquet(
+            spark, _fact(spark, [("U", "2023-01-01", 3.4 + 1e-12)]), target, KEYS, COMPARE
+        )
+        assert stats["unchanged"] == 1  # |Δ| < 1e-9 counts as equal
+        # the unchanged key keeps its stored value
+        assert _stored(spark, target)[datetime.date(2023, 1, 1)] == 3.4
 
 
 class TestDimInsertOnly:
-    def test_insert_missing(self, spark):
-        existing = spark.createDataFrame(
-            [("A1", "a", "FRED")], "series_id string, series_name string, source string"
-        )
+    def test_no_compare_columns_is_insert_only(self, spark, tmp_path):
+        """No compare columns = the dim table's insert-only mode
+        (reference src/load.py:108-134): new keys are inserted, a
+        matched key is unchanged and keeps its stored row."""
+        target = str(tmp_path / "dim")
+        schema = "series_id string, series_name string, source string"
+        existing = spark.createDataFrame([("A1", "a", "FRED")], schema)
+        U.upsert_parquet(spark, existing, target, ["series_id"], compare_cols=[])
         incoming = spark.createDataFrame(
-            [("A1", "a", "FRED"), ("B1", "b", "BLS")],
-            "series_id string, series_name string, source string",
+            [("A1", "renamed", "FRED"), ("B1", "b", "BLS")], schema
         )
-        new_rows, stats = U.insert_missing(existing, incoming, ["series_id"])
+        stats = U.upsert_parquet(spark, incoming, target, ["series_id"], compare_cols=[])
         assert stats == {"inserted": 1, "unchanged": 1}
-        assert [r["series_id"] for r in new_rows.collect()] == ["B1"]
+        stored = {r["series_id"]: r["series_name"] for r in spark.read.parquet(target).collect()}
+        assert stored == {"A1": "a", "B1": "b"}
+
+
+class TestDuplicateKeys:
+    def test_same_row_kept_in_either_partition_order(self, spark, tmp_path, caplog):
+        """A batch with two rows for one key stores the same row however
+        the batch is partitioned, and the drop is logged, not counted in
+        the stats."""
+        d = datetime.date(2023, 1, 1)
+        rows = [("U", "unemployment_rate", d, 1.0, "FRED"), ("U", "unemployment_rate", d, 2.0, "FRED")]
+        schema = "series_id string, series_name string, date date, value double, source string"
+        stored = []
+        for i, order in enumerate((rows, rows[::-1])):
+            target = str(tmp_path / f"t{i}")
+            # one row per partition, so partition order is row order
+            batch = spark.createDataFrame(spark.sparkContext.parallelize(order, 2), schema)
+            with caplog.at_level(logging.WARNING, logger=U.__name__):
+                stats = U.upsert_parquet(spark, batch, target, KEYS, COMPARE)
+            assert stats == {"inserted": 1, "updated": 0, "unchanged": 0}
+            assert "dropped 1 duplicate-key" in caplog.text
+            caplog.clear()
+            stored.append(_stored(spark, target))
+        assert stored[0] == stored[1] == {d: 2.0}
 
 
 class TestParquetUpsert:

@@ -20,7 +20,7 @@ import os
 import sys
 
 from economic_data_etl_spark import config
-from economic_data_etl_spark.pipeline import parquet_stores, run_pipeline
+from economic_data_etl_spark.pipeline import load_tables, parquet_stores, run_pipeline
 from economic_data_etl_spark.session import get_spark
 
 
@@ -91,19 +91,11 @@ def main(argv: list[str] | None = None) -> int:
         register(spark)
         fact_df = spark.read.format("economic_snapshots").load(args.raw_dir)
         dim_df = build_dim_series(spark, config.FRED_SERIES, config.BLS_SERIES)
-        # value-only change classification, matching the reference's
-        # upsert_observations (see pipeline.run_pipeline phase 3)
-        fact_stats = fact_store(fact_df, ["series_id", "date"], ["value"])
-        dim_stats = dim_store(dim_df, ["series_id"], ["series_name", "source"])
-        logging.info("fact upsert: %s", fact_stats)
-        logging.info("dim upsert: %s", dim_stats)
-        return 0
-
-    fetch_fred, fetch_bls = _live_fetchers()
-    result = run_pipeline(spark, fetch_fred, fetch_bls, fact_store, dim_store)
-    if result is None:
-        return 1
-    return 0
+        result = load_tables(fact_store, dim_store, fact_df, dim_df)
+    else:
+        fetch_fred, fetch_bls = _live_fetchers()
+        result = run_pipeline(spark, fetch_fred, fetch_bls, fact_store, dim_store)
+    return 0 if result is not None else 1
 
 
 if __name__ == "__main__":

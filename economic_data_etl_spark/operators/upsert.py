@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from economic_data_etl_spark.functions.casts import nan_safe_eq
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 
 logger = logging.getLogger(__name__)
 
@@ -36,6 +37,7 @@ STATUS_COL = "__change_status"
 DROPPED_COL = "__dup_dropped"  # batch rows dropped for this key as duplicates
 INSERTED, UPDATED, UNCHANGED = "inserted", "updated", "unchanged"
 RETAINED = "retained"  # existing-only rows; kept, never counted in stats
+EPS = 1e-9  # numeric equality tolerance (reference src/load.py:27-35)
 
 
 def _dedup(incoming: DataFrame, keys: list[str]) -> DataFrame:
@@ -58,7 +60,6 @@ def merge_with_status(
     incoming: DataFrame,
     keys: list[str],
     compare_cols: list[str],
-    eps: float = 1e-9,
 ) -> DataFrame:
     """ONE full-outer join producing the merged target content plus
     STATUS_COL ∈ {inserted, updated, unchanged, retained} and
@@ -94,7 +95,7 @@ def merge_with_status(
 
     def col_equal(c: str) -> Column:
         if c in numeric:  # epsilon tolerance only makes sense for numbers
-            return nan_safe_eq(F.col(f"__in_{c}"), F.col(f"__ex_{c}"), eps)
+            return nan_safe_eq(F.col(f"__in_{c}"), F.col(f"__ex_{c}"), EPS)
         return F.col(f"__in_{c}").eqNullSafe(F.col(f"__ex_{c}"))
 
     all_equal = functools.reduce(
@@ -130,7 +131,6 @@ def observed_merge(
     incoming: DataFrame,
     keys: list[str],
     compare_cols: list[str],
-    eps: float = 1e-9,
 ) -> tuple[DataFrame, Callable[[], dict[str, int]]]:
     """`merge_with_status` with its outcome counts observed on the same
     lineage. Returns the merged frame (STATUS_COL and DROPPED_COL still
@@ -138,7 +138,7 @@ def observed_merge(
     reads the stats once an action over that frame has run:
     {inserted, updated, unchanged}, or {inserted, unchanged} in
     insert-only mode (reference src/load.py:134)."""
-    merged = merge_with_status(existing, incoming, keys, compare_cols, eps)
+    merged = merge_with_status(existing, incoming, keys, compare_cols)
     outcomes = (INSERTED, UPDATED, UNCHANGED) if compare_cols else (INSERTED, UNCHANGED)
     obs = Observation()
     observed = merged.observe(
@@ -165,28 +165,23 @@ def upsert_parquet(
     target_path: str,
     keys: list[str],
     compare_cols: list[str],
-    eps: float = 1e-9,
 ) -> dict[str, int]:
-    """Plain-parquet upsert with staged atomic rewrite (no Delta needed):
-    write merged output to `<target>.staging`, then swap directories.
-    On object stores the swap becomes a metadata-catalog pointer flip.
+    """Plain-parquet upsert (no Delta needed): recover any interrupted
+    commit, merge, and replace the table with `commit_staged`
+    (operators/io.py), so a crash at any point loses no stored row.
 
     Single-pass: the full-outer merge and the outcome stats share one
     job — stats are collected by observe() metrics during the staging
     write, so neither table is scanned twice.
     """
     import os
-    import shutil
 
+    recover_staging(target_path)
     if os.path.exists(target_path):
         existing = spark.read.parquet(target_path)
     else:
         existing = spark.createDataFrame([], incoming.schema)
 
-    merged, stats = observed_merge(existing, incoming, keys, compare_cols, eps)
-    staging = f"{target_path}.staging"
-    merged.drop(STATUS_COL, DROPPED_COL).write.mode("overwrite").parquet(staging)
-    if os.path.exists(target_path):
-        shutil.rmtree(target_path)
-    os.rename(staging, target_path)
+    merged, stats = observed_merge(existing, incoming, keys, compare_cols)
+    commit_staged(merged.drop(STATUS_COL, DROPPED_COL).write, target_path)
     return stats()

@@ -29,6 +29,7 @@ logger = logging.getLogger(__name__)
 
 FetchFred = Callable[[str], dict[str, Any] | None]
 FetchBls = Callable[[dict[str, str], int, int], dict[str, Any] | None]
+Store = Callable[[DataFrame, list[str], list[str]], dict[str, int]]
 
 
 @dataclass
@@ -41,8 +42,8 @@ def run_pipeline(
     spark: SparkSession,
     fetch_fred: FetchFred,
     fetch_bls: FetchBls,
-    fact_store: Callable[[DataFrame, list[str], list[str]], dict[str, int]],
-    dim_store: Callable[[DataFrame, list[str], list[str]], dict[str, int]],
+    fact_store: Store,
+    dim_store: Store,
     fred_series: dict[str, str] | None = None,
     bls_series: dict[str, str] | None = None,
 ) -> PipelineResult | None:
@@ -79,6 +80,19 @@ def run_pipeline(
         return None
 
     # --- Phase 3: load (two actions: fact upsert + dim upsert) ------------
+    return load_tables(fact_store, dim_store, fact_df, dim_df)
+
+
+def load_tables(
+    fact_store: Store,
+    dim_store: Store,
+    fact_df: DataFrame,
+    dim_df: DataFrame,
+) -> PipelineResult | None:
+    """Phase 3, shared by `run_pipeline` and the `--offline` replay: the
+    fact upsert, then the dim upsert. A failure logs "Pipeline failed
+    during loading" and returns None; the bronze replay's lazy snapshot
+    scan runs (and fails on a malformed file) inside the fact upsert."""
     try:
         # Change classification compares VALUE ONLY — the reference's
         # upsert_observations (src/load.py:69-77) calls _nan_equal on

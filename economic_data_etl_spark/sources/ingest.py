@@ -20,9 +20,9 @@ from datetime import datetime, timezone
 from pathlib import Path
 from typing import Any, Callable
 
-logger = logging.getLogger(__name__)
+from economic_data_etl_spark.config import RETRY_ATTEMPTS
 
-RETRY_ATTEMPTS = 3  # parity: /root/reference/src/extract.py:49-62
+logger = logging.getLogger(__name__)
 
 
 class RetryableFetchError(Exception):

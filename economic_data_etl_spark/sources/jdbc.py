@@ -22,9 +22,9 @@ through ``spark.read/write.format("jdbc")``:
 
 At 100 TB the database side is the bottleneck by construction (JDBC
 targets hold dimension/fact summaries, not the raw corpus); the Spark
-side partitions the stage write (``numPartitions``) and never
-collects. Tested against the embedded Derby driver bundled with Spark;
-a Postgres URL behaves identically modulo DDL types.
+side writes the stage from its own partitions and never collects.
+Tested against the embedded Derby driver bundled with Spark; a Postgres
+URL behaves identically modulo DDL types.
 """
 
 from __future__ import annotations
@@ -129,7 +129,6 @@ def jdbc_append(
     table: str,
     mode: str = "append",
     create_types: str | None = None,
-    num_partitions: int | None = None,
 ) -> None:
     """Plain append/overwrite sink. `create_types` feeds Spark's
     createTableColumnTypes so created tables get comparable VARCHAR
@@ -138,8 +137,6 @@ def jdbc_append(
     w = df.write.format("jdbc").option("url", url).option("dbtable", table)
     if create_types:
         w = w.option("createTableColumnTypes", create_types)
-    if num_partitions:
-        w = w.option("numPartitions", str(num_partitions))
     w.mode(mode).save()
 
 
@@ -150,7 +147,6 @@ def jdbc_upsert(
     table: str,
     keys: list[str],
     compare_cols: list[str],
-    eps: float = 1e-9,
     create_types: str | None = None,
 ) -> dict[str, int]:
     """Reference ``upsert_observations`` (src/load.py:42-103) against a
@@ -164,7 +160,7 @@ def jdbc_upsert(
     "unchanged"}.
     """
     existing = jdbc_read(spark, url, table, columns=incoming.columns)
-    merged, merge_stats = observed_merge(existing, incoming, keys, compare_cols, eps)
+    merged, merge_stats = observed_merge(existing, incoming, keys, compare_cols)
     changed = merged.filter(F.col(STATUS_COL).isin(INSERTED, UPDATED)).drop(
         STATUS_COL, DROPPED_COL
     )

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.operators.urls import canonical_url
 from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
@@ -166,10 +167,8 @@ def apply_erasure(
     import os
     import shutil
 
-    from economic_data_etl_spark.streaming.util import recover_staging
-
     for d in (index_dir, frontier_dir):
-        recover_staging(f"{d}.staging", d)
+        recover_staging(d)
 
     tombs = read_parquet_or_empty(
         spark, tombstones_dir, TOMBSTONES_SCHEMA
@@ -190,11 +189,7 @@ def apply_erasure(
         masked = read_frontier_erased(
             spark, path, tombstones_dir, patch_dir
         )
-        staging = f"{path}.staging"
-        masked.write.mode("overwrite").parquet(staging)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(staging, path)
+        commit_staged(masked.write, path)
     if os.path.exists(patch_dir):
         shutil.rmtree(patch_dir)
     shutil.rmtree(tombstones_dir)  # cleared last

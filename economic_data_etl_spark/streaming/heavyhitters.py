@@ -37,10 +37,9 @@ argument.
 Restart semantics: the state row carries the id of the last batch
 folded in; a redelivered batch (batch_id <= stored) is SKIPPED, making
 the fold exactly-once under foreachBatch's at-least-once delivery.
-The state swap is staged-write + rename with the trending sink's
-crash-window recovery (a failure between rmtree(state) and
-rename(staging) leaves the only copy in staging; the next invocation
-finishes the swap before reading). Property-fuzzed at every kill
+The state is replaced with `operators/io.py:commit_staged`; every
+invocation first runs `recover_staging`, which finishes or rolls back
+a commit a crash interrupted, before reading. Property-fuzzed at every kill
 offset in tests/test_heavyhitters_stream.py.
 """
 
@@ -57,6 +56,7 @@ from pyspark.sql.types import (
 )
 
 from economic_data_etl_spark.operators.heavyhitters import mg_summaries
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 STATE_SCHEMA = StructType(
@@ -129,17 +129,9 @@ def foreach_batch_heavy_hitters(
     cap = 2 * k + 1
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
         spark = batch_df.sparkSession
-        staging = f"{state_dir}.staging"
-        # finish an interrupted swap before reading (see module doc)
-        from economic_data_etl_spark.streaming.util import (
-            recover_staging,
-        )
-
-        recover_staging(staging, state_dir)
+        # finish an interrupted commit before reading (see module doc)
+        recover_staging(state_dir)
         counters, n_total, err, last_bid = _read_state(spark, state_dir)
         if batch_id <= last_bid:
             return  # redelivered batch: already folded, exactly-once
@@ -165,12 +157,8 @@ def foreach_batch_heavy_hitters(
         rows = [
             (t, w, False, None, None, None) for t, w in merged.items()
         ] + [(None, None, True, n_total, err, batch_id)]
-        spark.createDataFrame(rows, STATE_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(staging, state_dir)
+        state = spark.createDataFrame(rows, STATE_SCHEMA).coalesce(1)
+        commit_staged(state.write, state_dir)
 
     return handle
 

@@ -42,6 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.operators.retrieval import append_to_index
 from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
@@ -163,18 +164,15 @@ def apply_erasure(
     1. APPEND the revoked ids to the tombstone table — the commit
        point; read_index_erased is correct from here on, and replaying
        this step only adds duplicate tombstone rows (readers dedupe);
-    2. compact postings, then doclens: staged anti-join rewrite + swap
-       (shared recover_staging semantics — a partial staging dir is
-       discarded, a complete one promoted);
+    2. compact postings, then doclens: anti-join rewrite committed with
+       `commit_staged` (operators/io.py; `recover_staging` finishes or
+       rolls back an interrupted commit first);
     3. clear the tombstone table LAST. A crash anywhere before this
        leaves tombstones masking rows that may or may not still exist
        — the anti-join of already-deleted rows is a no-op, so every
        interleaving of crash + replay converges to the reduced index.
     """
-    import os
     import shutil
-
-    from economic_data_etl_spark.streaming.util import recover_staging
 
     ids = revoked.select(
         F.col(revoked.columns[0]).cast("long").alias("doc_id")
@@ -188,14 +186,10 @@ def apply_erasure(
         (postings_dir, POSTINGS_SCHEMA),
         (doclens_dir, DOCLENS_SCHEMA),
     ):
-        staging = f"{path}.staging"
-        recover_staging(staging, path)
+        recover_staging(path)
         kept = read_parquet_or_empty(spark, path, schema).join(
             tombs, "doc_id", "left_anti"
         )
-        kept.write.mode("overwrite").parquet(staging)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(staging, path)
+        commit_staged(kept.write, path)
     # tombstones cleared last: until here they keep masking reads
     shutil.rmtree(tombstones_dir)

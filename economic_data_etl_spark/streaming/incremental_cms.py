@@ -6,11 +6,10 @@ exactly the batch build, bit-for-bit, in any arrival order.
 The streaming twin of `operators/cms.py:cms_build`. Per batch: one
 scan of the batch (exploded by depth, collapsed map-side to
 <= depth x width rows), then a bucket-wise sum with the standing
-sketch — both sides sketch-sized, never stream-sized — staged to a
-sibling path and swapped atomically (the trending sink's pattern,
-including its crash-window recovery: a failure between rmtree(state)
-and rename(staging) leaves the only copy in staging, and the next
-invocation finishes the swap before reading).
+sketch — both sides sketch-sized, never stream-sized — committed with
+`operators/io.py:commit_staged`; every invocation first runs
+`recover_staging`, which finishes or rolls back a commit a crash
+interrupted, before reading.
 
 Restart semantics: sketch addition is NOT idempotent, so the state
 carries a batch-id high-water mark exactly like the heavy-hitters
@@ -26,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from economic_data_etl_spark.operators.cms import cms_build
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 STATE_SCHEMA = StructType(
@@ -68,16 +68,8 @@ def foreach_batch_incremental_cms(
     sketch bucket-wise into the standing sketch and swap."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
         spark = batch_df.sparkSession
-        staging = f"{state_dir}.staging"
-        from economic_data_etl_spark.streaming.util import (
-            recover_staging,
-        )
-
-        recover_staging(staging, state_dir)
+        recover_staging(state_dir)
         if batch_id <= _last_batch_id(spark, state_dir):
             return  # redelivered batch: already folded
         batch_sketch = cms_build(batch_df, col, depth, width).select(
@@ -94,9 +86,6 @@ def foreach_batch_incremental_cms(
         )
         # staged write is fully distributed (the sketch is tiny, but
         # nothing here assumes it fits on the driver)
-        merged.unionByName(meta).write.mode("overwrite").parquet(staging)
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(staging, state_dir)
+        commit_staged(merged.unionByName(meta).write, state_dir)
 
     return handle

@@ -14,10 +14,10 @@ level shift as observations arrive, without re-scanning history.
 Restart semantics: additive folds are NOT idempotent, so the state
 carries a batch-id high-water mark exactly like the CMS/heavy-hitters
 sinks; a redelivered batch is skipped, making folds exactly-once under
-foreachBatch's at-least-once delivery. The staged-write + atomic-swap
-sequence (and its crash-window recovery: a failure between
-rmtree(state) and rename(staging) leaves the only copy in staging,
-finished by the next invocation) is the trending sink's pattern.
+foreachBatch's at-least-once delivery. The state is replaced with
+`operators/io.py:commit_staged`, and every invocation first runs
+`recover_staging`, which finishes or rolls back a commit a crash
+interrupted.
 Property-fuzzed at every kill offset in
 tests/test_incremental_cusum_stream.py.
 """
@@ -39,6 +39,7 @@ from economic_data_etl_spark.operators.cusum import (
     cusum_from_daily,
     daily_totals,
 )
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 STATE_SCHEMA = StructType(
@@ -106,14 +107,8 @@ def foreach_batch_incremental_cusum(
     daily totals into the standing table key-wise and swap."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
-        from economic_data_etl_spark.streaming.util import recover_staging
-
         spark = batch_df.sparkSession
-        staging = f"{state_dir}.staging"
-        recover_staging(staging, state_dir)
+        recover_staging(state_dir)
         if batch_id <= _last_batch_id(spark, state_dir):
             return  # redelivered batch: already folded
         batch_daily = daily_totals(
@@ -130,9 +125,6 @@ def foreach_batch_incremental_cusum(
         )
         # staged write is fully distributed (the index is tiny, but
         # nothing here assumes it fits on the driver)
-        merged.unionByName(meta).write.mode("overwrite").parquet(staging)
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(staging, state_dir)
+        commit_staged(merged.unionByName(meta).write, state_dir)
 
     return handle

@@ -22,10 +22,10 @@ A violation (a batch day at or before the key's folded last_day) is
 the caller's bug and raises rather than silently mis-folding.
 
 State is key-sized (a handful of doubles per key — the index the 100 TB
-stream collapses to), so the staged-write + atomic-swap sequence of the
-CUSUM/trending sinks applies unchanged, including the batch-id
-high-water mark (folds are not idempotent) and the crash-window
-recovery contract (recover_staging). Fuzzed at every kill offset in
+stream collapses to), so the staged commit of the CUSUM/trending sinks
+(`operators/io.py:commit_staged` + `recover_staging`) applies
+unchanged, including the batch-id high-water mark (folds are not
+idempotent). Fuzzed at every kill offset in
 tests/test_incremental_holtwinters_stream.py.
 """
 
@@ -49,6 +49,7 @@ from economic_data_etl_spark.operators.holtwinters import (
     hw_fold,
     hw_init,
 )
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 STATE_SCHEMA = StructType(
@@ -210,16 +211,8 @@ def foreach_batch_incremental_holtwinters(
     the recurrence and stage-swap the state."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
-        from economic_data_etl_spark.streaming.util import (
-            recover_staging,
-        )
-
         spark = batch_df.sparkSession
-        staging = f"{state_dir}.staging"
-        recover_staging(staging, state_dir)
+        recover_staging(state_dir)
         if batch_id <= _last_batch_id(spark, state_dir):
             return  # redelivered batch: already folded
         batch_daily = batch_df.select(
@@ -234,11 +227,6 @@ def foreach_batch_incremental_holtwinters(
             [(_META, None, batch_id, None, None, None, None)],
             STATE_SCHEMA,
         )
-        merged.unionByName(meta).write.mode("overwrite").parquet(
-            staging
-        )
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(staging, state_dir)
+        commit_staged(merged.unionByName(meta).write, state_dir)
 
     return handle

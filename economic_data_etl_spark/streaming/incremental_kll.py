@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.operators.kll import (
     SKETCH_SCHEMA,
     kll_quantiles,
@@ -72,16 +73,8 @@ def foreach_batch_incremental_kll(
     and merge it into the standing sketch, staged + swapped."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
         spark = batch_df.sparkSession
-        staging = f"{state_dir}.staging"
-        from economic_data_etl_spark.streaming.util import (
-            recover_staging,
-        )
-
-        recover_staging(staging, state_dir)
+        recover_staging(state_dir)
         if batch_id <= _last_batch_id(spark, state_dir):
             return  # redelivered batch: already folded
         batch_sketch = kll_sketch(batch_df, col, k)
@@ -99,9 +92,6 @@ def foreach_batch_incremental_kll(
         )
         # staged write is fully distributed (the sketch is tiny, but
         # nothing here assumes it fits on the driver)
-        merged.unionByName(meta).write.mode("overwrite").parquet(staging)
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(staging, state_dir)
+        commit_staged(merged.unionByName(meta).write, state_dir)
 
     return handle

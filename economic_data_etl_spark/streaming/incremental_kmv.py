@@ -22,11 +22,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.operators.kmv import kmv_sketch_by
-from economic_data_etl_spark.streaming.util import (
-    read_parquet_or_empty,
-    recover_staging,
-)
+from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 STATE_SCHEMA = StructType(
     [
@@ -69,12 +67,8 @@ def foreach_batch_incremental_kmv(
     standing per-group state (k smallest distinct hashes per group)."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
         spark = batch_df.sparkSession
-        staging = f"{state_dir}.staging"
-        recover_staging(staging, state_dir)
+        recover_staging(state_dir)
         if batch_id <= _last_batch_id(spark, state_dir):
             return  # redelivered batch: already folded
         batch_sk = kmv_sketch_by(batch_df, key_col, group_col, k)
@@ -95,11 +89,6 @@ def foreach_batch_incremental_kmv(
         meta = spark.createDataFrame(
             [(_META_GRP, batch_id)], STATE_SCHEMA
         )
-        trimmed.unionByName(meta).write.mode("overwrite").parquet(
-            staging
-        )
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(staging, state_dir)
+        commit_staged(trimmed.unionByName(meta).write, state_dir)
 
     return handle

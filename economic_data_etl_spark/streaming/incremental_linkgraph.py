@@ -46,6 +46,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 EDGES_SCHEMA = StructType(
@@ -139,27 +140,20 @@ def apply_erasure(
     1. APPEND (doc_id, base_url) tombstones — the commit point;
        read_edges_erased serves the reduced graph from here on, and a
        replayed append only adds duplicate tombstone rows;
-    2. compact: staged rewrite of the edge table with both-sided
-       anti-joins + swap (recover_staging promotes only a complete
-       staging dir);
+    2. compact: rewrite of the edge table with both-sided anti-joins,
+       committed with `operators/io.py:commit_staged` after
+       `recover_staging`;
     3. clear the tombstone table LAST — re-masking already-compacted
        rows is a no-op, so every crash + replay interleaving
        converges to the reduced graph.
     """
-    import os
     import shutil
-
-    from economic_data_etl_spark.streaming.util import recover_staging
 
     revoked.select(
         F.col("doc_id").cast("long"), F.col("base_url")
     ).write.mode("append").parquet(tombstones_dir)  # commit point
 
-    staging = f"{edges_dir}.staging"
-    recover_staging(staging, edges_dir)
+    recover_staging(edges_dir)
     kept = read_edges_erased(spark, edges_dir, tombstones_dir)
-    kept.write.mode("overwrite").parquet(staging)
-    if os.path.exists(edges_dir):
-        shutil.rmtree(edges_dir)
-    os.rename(staging, edges_dir)
+    commit_staged(kept.write, edges_dir)
     shutil.rmtree(tombstones_dir)  # cleared last

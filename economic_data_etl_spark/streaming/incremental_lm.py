@@ -12,9 +12,9 @@ fences of the sink family apply:
   no-ops (counts are NOT idempotent per row — additivity cuts the
   other way — so the fence is load-bearing here, unlike the
   hash-dedup sinks where the math itself absorbs redelivery);
-- the **staged swap** (write to .staging, promote only on _SUCCESS via
-  recover_staging) makes a crash at any offset leave either the old
-  or the new index, never a torn one.
+- the **staged commit** (`operators/io.py:commit_staged`, with
+  `recover_staging` before every read) makes a crash at any offset
+  leave either the old or the new index, never a torn one.
 
 State is vocabulary-sized (all grams seen so far, orders 1-3), the
 same growth class as the standing BM25 postings
@@ -35,10 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from economic_data_etl_spark.streaming.util import (
-    read_parquet_or_empty,
-    recover_staging,
-)
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
+from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 STATE_SCHEMA = StructType(
     [
@@ -86,9 +84,6 @@ def foreach_batch_incremental_lm(state_dir: str):
     standing table."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
         from economic_data_etl_spark.plans.lmppl import (
             _gram_counts,
             _positions,
@@ -96,8 +91,7 @@ def foreach_batch_incremental_lm(state_dir: str):
         )
 
         spark = batch_df.sparkSession
-        staging = f"{state_dir}.staging"
-        recover_staging(staging, state_dir)
+        recover_staging(state_dir)
         if batch_id <= last_batch_id(spark, state_dir):
             return  # redelivered batch: counts are additive, so skip
         batch_counts = _gram_counts(
@@ -113,10 +107,7 @@ def foreach_batch_incremental_lm(state_dir: str):
         meta = spark.createDataFrame(
             [(_META_ORD, _META_G, batch_id)], STATE_SCHEMA
         )
-        merged.unionByName(meta).write.mode("overwrite").parquet(staging)
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(staging, state_dir)
+        commit_staged(merged.unionByName(meta).write, state_dir)
 
     return handle
 

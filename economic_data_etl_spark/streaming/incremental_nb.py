@@ -17,9 +17,9 @@ The two standard fences of the sink family apply:
 - the **batch-id high-water mark** fences redelivery (counts are
   additive, NOT idempotent per row — the fence is load-bearing, as in
   the LM sink);
-- the **staged swap** (write to .staging, promote only on _SUCCESS via
-  recover_staging) leaves either the old or the new state on a crash
-  at any offset, never a torn one.
+- the **staged commit** (`operators/io.py:commit_staged`, with
+  `recover_staging` before every read) leaves either the old or the
+  new state on a crash at any offset, never a torn one.
 
 State rows: kind 'w' = (lang, wd, c) token counts, kind 'd' =
 (lang, '', dc) doc counts, kind 'm' = the meta high-water mark. State
@@ -43,10 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from economic_data_etl_spark.streaming.util import (
-    read_parquet_or_empty,
-    recover_staging,
-)
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
+from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 STATE_SCHEMA = StructType(
     [
@@ -129,12 +127,8 @@ def foreach_batch_incremental_nb(state_dir: str):
     standing table."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
         spark = batch_df.sparkSession
-        staging = f"{state_dir}.staging"
-        recover_staging(staging, state_dir)
+        recover_staging(state_dir)
         if batch_id <= last_batch_id(spark, state_dir):
             return  # redelivery: additive counts must not re-fold
         merged = fold_state(
@@ -146,12 +140,7 @@ def foreach_batch_incremental_nb(state_dir: str):
         meta = spark.createDataFrame(
             [(_META_KIND, "", "", batch_id)], STATE_SCHEMA
         )
-        merged.unionByName(meta).write.mode("overwrite").parquet(
-            staging
-        )
-        if os.path.exists(state_dir):
-            shutil.rmtree(state_dir)
-        os.rename(staging, state_dir)
+        commit_staged(merged.unionByName(meta).write, state_dir)
 
     return handle
 

@@ -30,11 +30,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.operators.training import hash_bucket
-from economic_data_etl_spark.streaming.util import (
-    read_parquet_or_empty,
-    recover_staging,
-)
+from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 STATE_SCHEMA = StructType(
     [
@@ -104,11 +102,7 @@ def fold_batch(
     batch_id: int,
 ) -> None:
     """Merge one rank-keyed batch into the standing reservoir."""
-    import os
-    import shutil
-
-    staging = f"{state_dir}.staging"
-    recover_staging(staging, state_dir)
+    recover_staging(state_dir)
     if batch_id <= _last_batch_id(spark, state_dir):
         return  # redelivered batch: already folded
     merged = (
@@ -122,10 +116,7 @@ def fold_batch(
     meta = spark.createDataFrame(
         [(_META_ID, None, None, None, batch_id)], STATE_SCHEMA
     )
-    merged.unionByName(meta).write.mode("overwrite").parquet(staging)
-    if os.path.exists(state_dir):
-        shutil.rmtree(state_dir)
-    os.rename(staging, state_dir)
+    commit_staged(merged.unionByName(meta).write, state_dir)
 
 
 def foreach_batch_incremental_sample(

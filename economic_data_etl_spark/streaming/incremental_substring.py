@@ -36,6 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.operators.substring import (
     merge_spans,
     substring_incremental_dups_prov,
@@ -177,11 +178,10 @@ def apply_erasure(
     from economic_data_etl_spark.operators.substring import (
         substring_erasure_patch,
     )
-    from economic_data_etl_spark.streaming.util import recover_staging
 
     pidx_dir, pspan_dir = _patch_dirs(patch_dir)
-    recover_staging(f"{index_dir}.staging", index_dir)
-    recover_staging(f"{spans_dir}.staging", spans_dir)
+    recover_staging(index_dir)
+    recover_staging(spans_dir)
 
     tombs = read_parquet_or_empty(
         spark, tombstones_dir, TOMBSTONES_SCHEMA
@@ -205,11 +205,7 @@ def apply_erasure(
         spark, index_dir, spans_dir, tombstones_dir, patch_dir
     )
     for path, df in ((index_dir, index_m), (spans_dir, spans_m)):
-        staging = f"{path}.staging"
-        df.write.mode("overwrite").parquet(staging)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(staging, path)
+        commit_staged(df.write, path)
     if os.path.exists(patch_dir):
         shutil.rmtree(patch_dir)
     shutil.rmtree(tombstones_dir)  # cleared last

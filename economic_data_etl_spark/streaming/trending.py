@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.streaming.windows import _as_event_time
 
 
@@ -64,23 +65,11 @@ def foreach_batch_trending_topk(
     from economic_data_etl_spark.operators.topk import grouped_top_k
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
         spark = batch_df.sparkSession
-        staging = f"{counts_path}.staging"
-        # Crash-window recovery: a failure between rmtree(counts) and
-        # rename(staging) leaves the only copy of the accumulated
-        # counts in the staging dir — finish the interrupted swap
-        # before reading, or the bare first-run fallback below would
-        # silently reset every total. (os-path swap = local-FS scope,
-        # matching local-mode tests; a production deployment would
-        # point this sink at a transactional table format instead.)
-        from economic_data_etl_spark.streaming.util import (
-            recover_staging,
-        )
-
-        recover_staging(staging, counts_path)
+        # Finish or roll back a commit a crash interrupted before
+        # reading, or the bare first-run fallback below would silently
+        # reset every total (operators/io.py:recover_staging).
+        recover_staging(counts_path)
         fresh = batch_df.select("window_start", key, "n_events")
         try:
             old = spark.read.parquet(counts_path)
@@ -95,15 +84,12 @@ def foreach_batch_trending_topk(
             merged = keep.unionByName(fresh)
         else:
             merged = fresh
-        # stage the merged counts to a sibling path, then swap the
-        # directories (read-then-overwrite of the same path within one
-        # job is not safe in plain parquet). The staged write is fully
+        # commit through a staging path (read-then-overwrite of the
+        # same path within one job is not safe in plain parquet). The
+        # staged write is fully
         # distributed — no driver materialization, so the sink never
         # assumes the counts table fits on the driver.
-        merged.write.mode("overwrite").parquet(staging)
-        if os.path.exists(counts_path):
-            shutil.rmtree(counts_path)
-        os.rename(staging, counts_path)
+        commit_staged(merged.write, counts_path)
         counts = spark.read.parquet(counts_path)
         grouped_top_k(
             counts,

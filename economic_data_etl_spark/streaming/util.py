@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from economic_data_etl_spark.operators.io import commit_staged, recover_staging
+
 # Error-class fragments Spark raises for a nonexistent read path; both
 # the Spark-4 error-class name and the legacy message are matched so
 # the check survives version drift.
@@ -80,16 +82,16 @@ def tombstone_then_compact(
     1. APPEND revoked ids to the tombstone table — the commit point;
        the caller's read_*_erased masks every table from here on, and
        a replayed append only adds duplicate tombstone rows.
-    2. Compact each table in turn: staged anti-join rewrite + swap
-       (recover_staging promotes a complete staging dir, discards a
-       partial one). Re-erasing already-compacted rows is a no-op, so
-       any crash+replay interleaving converges.
+    2. Compact each table in turn: anti-join rewrite committed with
+       `commit_staged` (operators/io.py), after `recover_staging` has
+       finished or rolled back any interrupted commit. Re-erasing
+       already-compacted rows is a no-op, so any crash+replay
+       interleaving converges.
     3. Clear the tombstone table LAST — until then it keeps masking.
 
     `tables`: (path, schema, match_cols) — a row is erased when any of
     match_cols holds a tombstoned id.
     """
-    import os
     import shutil
 
     id_col = tombstones_schema.fieldNames()[0]
@@ -104,40 +106,10 @@ def tombstone_then_compact(
         spark, tombstones_dir, tombstones_schema
     ).dropDuplicates([id_col])
     for path, schema, cols in tables:
-        staging = f"{path}.staging"
-        recover_staging(staging, path)
+        recover_staging(path)
         kept = erase_ids(
             read_parquet_or_empty(spark, path, schema), tombs, cols
         )
-        kept.write.mode("overwrite").parquet(staging)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(staging, path)
+        commit_staged(kept.write, path)
     shutil.rmtree(tombstones_dir)  # cleared last
 
-
-def recover_staging(staging: str, target: str) -> None:
-    """Finish — or roll back — an interrupted staged swap.
-
-    The staged-swap sinks write the next state to `<target>.staging`
-    then rename over `target`; a driver death can leave `staging`
-    present with `target` absent. Promote it ONLY when the write
-    completed (Spark's `_SUCCESS` commit marker): a death mid-write of
-    the very first batch would otherwise promote a PARTIAL staging dir
-    whose meta row is missing, the batch-id high-water mark would read
-    -1, and the redelivered batch would refold on top of the partial
-    rows — double-counting. An incomplete staging dir is deleted so
-    the redelivered batch rebuilds from the (empty) true state.
-
-    Local-FS scope (os.rename), matching the sinks' own swap; a
-    production deployment points these sinks at a transactional table
-    format instead.
-    """
-    import os
-    import shutil
-
-    if os.path.exists(staging) and not os.path.exists(target):
-        if os.path.exists(os.path.join(staging, "_SUCCESS")):
-            os.rename(staging, target)
-        else:
-            shutil.rmtree(staging)

@@ -154,11 +154,9 @@ def test_crash_at_every_offset_converges(spark, sf_dir, tmp_path):
                 h(batch, bi)
                 continue
             # replicate the handler's step sequence
-            from economic_data_etl_spark.streaming.util import (
-                recover_staging,
-            )
+            from economic_data_etl_spark.operators.io import recover_staging
 
-            recover_staging(staging, state_dir)
+            recover_staging(state_dir)
             merged = _fold_batch(read_state(spark, state_dir), batch)
             meta = spark.createDataFrame(
                 [(_META, None, bi, None, None, None, None)],

@@ -1,15 +1,19 @@
 """Upsert operator parity tests (reference tests/test_load.py:12-161):
 insert/update/unchanged stats triple, NaN-safe epsilon equality, rerun
 idempotency, insert-only dim semantics, deterministic duplicate keys,
-staged parquet rewrite — all through the production store,
-`upsert_parquet`."""
+staged parquet rewrite, crash safety of the table commit — all through
+the production store, `upsert_parquet`."""
 
 from __future__ import annotations
 
 import datetime
 import logging
+import os
+
+import pytest
 
 from economic_data_etl_spark.operators import upsert as U
+from tests.crash_points import Killed, crash_offsets, kill_fs_call
 
 KEYS = ["series_id", "date"]
 COMPARE = ["value", "series_name", "source"]
@@ -151,6 +155,52 @@ class TestParquetUpsert:
             datetime.date(2023, 1, 1): 9.9,
             datetime.date(2023, 2, 1): 1.0,
         }
+
+
+class TestCrashSafeCommit:
+    """A process death at any point of the table commit loses no stored
+    row: re-running the same batch gives the table a crash-free run
+    gives, and leaves no staging or `.old` directory behind."""
+
+    SEED = [("U", "2023-01-01", 3.4), ("U", "2023-02-01", 3.5), ("U", "2023-03-01", 3.6)]
+    BATCH = [("U", "2023-04-01", 3.7)]
+
+    def _seeded(self, spark, base):
+        base.mkdir()
+        target = str(base / "fact")
+        U.upsert_parquet(spark, _fact(spark, self.SEED), target, KEYS, COMPARE)
+        return target
+
+    def _upsert(self, spark, target):
+        return U.upsert_parquet(spark, _fact(spark, self.BATCH), target, KEYS, COMPARE)
+
+    def _table(self, spark, target):
+        return sorted(tuple(r) for r in spark.read.parquet(target).collect())
+
+    def test_crash_at_any_commit_step_loses_no_rows(self, spark, tmp_path):
+        clean = self._seeded(spark, tmp_path / "clean")
+        with kill_fs_call(None) as calls:
+            self._upsert(spark, clean)
+        want = self._table(spark, clean)
+        assert len(want) == 4
+
+        cases = [(k, False) for k in crash_offsets(len(calls))]
+        cases += [(k, True) for k, c in enumerate(calls) if c == "rmtree"]
+        # again: a second death on the first file-system call of the
+        # retry lands inside recovery whenever there is something to recover
+        for again in (False, True):
+            for k, partial in cases:
+                base = tmp_path / f"k{k}{'p' * partial}{'a' * again}"
+                target = self._seeded(spark, base)
+                with pytest.raises(Killed), kill_fs_call(k, partial):
+                    self._upsert(spark, target)
+                if again:
+                    with pytest.raises(Killed), kill_fs_call(0, partial=True):
+                        self._upsert(spark, target)
+                self._upsert(spark, target)
+                case = f"kill_at={k} partial={partial} again={again}"
+                assert self._table(spark, target) == want, case
+                assert os.listdir(base) == ["fact"], case
 
 
 class TestReferenceUpdateSemantics:

@@ -8,7 +8,8 @@ only the matching directories — the scan lists N files, not the table
 
 It also holds the one commit protocol for replacing a parquet table
 (`commit_staged` + `recover_staging`), used by the warehouse upsert,
-compaction and every standing-state streaming sink.
+compaction and every standing-state streaming sink, and the one read of
+such a table that may not exist yet (`read_parquet_or_empty`).
 """
 
 from __future__ import annotations
@@ -18,6 +19,12 @@ import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql.types import StructType
+
+# Error-class fragments Spark raises for a nonexistent read path; both
+# the Spark-4 error-class name and the legacy message are matched so
+# the check survives version drift.
+_MISSING_PATH_MARKERS = ("PATH_NOT_FOUND", "Path does not exist")
 
 
 def write_partitioned(
@@ -103,8 +110,9 @@ def recover_staging(target: str) -> None:
     With `target` missing, a complete staging dir (`_SUCCESS` present)
     is the committed next table and is promoted; otherwise `.old` is
     the last committed table and is restored. A partial staging dir is
-    never promoted: for the streaming sinks its missing meta row would
-    read as batch id -1 and the redelivered batch would fold twice.
+    never promoted: for the streaming sinks its missing batch-id mark
+    row (`streaming/util.py:BatchMark`) would read as batch id -1 and
+    the redelivered batch would fold twice.
     Any leftover staging or `.old` dir is then deleted.
     """
     staging, old = f"{target}.staging", f"{target}.old"
@@ -116,3 +124,29 @@ def recover_staging(target: str) -> None:
     for leftover in (staging, old):
         if os.path.exists(leftover):
             shutil.rmtree(leftover)
+
+
+def read_parquet_or_empty(
+    spark: SparkSession, path: str, schema: StructType | str
+) -> DataFrame:
+    """Read a parquet table with a known schema, or an empty DataFrame
+    with that schema when the table has never been written.
+
+    The read goes through spark.read (Hadoop FileSystem), so remote
+    paths (hdfs://, s3a://) work exactly like local ones, and the
+    explicit schema means no inference job. A missing path — the
+    legitimate "first write ever" state — yields the empty frame;
+    anything else (permissions, corrupt footer, a typo'd scheme)
+    re-raises, so a misconfigured path can never silently behave as an
+    empty table.
+    """
+    from pyspark.errors import AnalysisException
+
+    try:
+        # DataFrameReader.parquet resolves the path eagerly, so a
+        # missing directory surfaces here, not at action time.
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        if any(m in str(e) for m in _MISSING_PATH_MARKERS):
+            return spark.createDataFrame([], schema)
+        raise

@@ -29,7 +29,11 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from economic_data_etl_spark.functions.casts import nan_safe_eq
-from economic_data_etl_spark.operators.io import commit_staged, recover_staging
+from economic_data_etl_spark.operators.io import (
+    commit_staged,
+    read_parquet_or_empty,
+    recover_staging,
+)
 
 logger = logging.getLogger(__name__)
 
@@ -172,15 +176,11 @@ def upsert_parquet(
 
     Single-pass: the full-outer merge and the outcome stats share one
     job — stats are collected by observe() metrics during the staging
-    write, so neither table is scanned twice.
+    write, so neither table is scanned twice. The target is read with
+    the incoming schema (no inference job), like `jdbc_upsert`.
     """
-    import os
-
     recover_staging(target_path)
-    if os.path.exists(target_path):
-        existing = spark.read.parquet(target_path)
-    else:
-        existing = spark.createDataFrame([], incoming.schema)
+    existing = read_parquet_or_empty(spark, target_path, incoming.schema)
 
     merged, stats = observed_merge(existing, incoming, keys, compare_cols)
     commit_staged(merged.drop(STATUS_COL, DROPPED_COL).write, target_path)

@@ -29,9 +29,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from economic_data_etl_spark.operators.io import commit_staged, recover_staging
+from economic_data_etl_spark.operators.io import (
+    commit_staged,
+    read_parquet_or_empty,
+    recover_staging,
+)
 from economic_data_etl_spark.operators.urls import canonical_url
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 INDEX_SCHEMA = StructType(
     [

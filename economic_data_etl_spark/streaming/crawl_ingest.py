@@ -31,7 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
+from economic_data_etl_spark.operators.io import read_parquet_or_empty
 
 LANDED_SCHEMA = StructType(
     [

@@ -56,8 +56,11 @@ from pyspark.sql.types import (
 )
 
 from economic_data_etl_spark.operators.heavyhitters import mg_summaries
-from economic_data_etl_spark.operators.io import commit_staged, recover_staging
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
+from economic_data_etl_spark.operators.io import (
+    commit_staged,
+    read_parquet_or_empty,
+    recover_staging,
+)
 
 STATE_SCHEMA = StructType(
     [

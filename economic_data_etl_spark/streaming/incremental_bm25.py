@@ -42,9 +42,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from economic_data_etl_spark.operators.io import commit_staged, recover_staging
+from economic_data_etl_spark.operators.io import (
+    commit_staged,
+    read_parquet_or_empty,
+    recover_staging,
+)
 from economic_data_etl_spark.operators.retrieval import append_to_index
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 POSTINGS_SCHEMA = StructType(
     [

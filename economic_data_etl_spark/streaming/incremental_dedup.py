@@ -29,7 +29,7 @@ from economic_data_etl_spark.operators.dedup import (
     minhash_incremental_pairs,
     minhash_signatures,
 )
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
+from economic_data_etl_spark.operators.io import read_parquet_or_empty
 
 SIG_SCHEMA = StructType(
     [

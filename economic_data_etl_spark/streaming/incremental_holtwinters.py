@@ -22,10 +22,10 @@ A violation (a batch day at or before the key's folded last_day) is
 the caller's bug and raises rather than silently mis-folding.
 
 State is key-sized (a handful of doubles per key — the index the 100 TB
-stream collapses to), so the staged commit of the CUSUM/trending sinks
-(`operators/io.py:commit_staged` + `recover_staging`) applies
-unchanged, including the batch-id high-water mark (folds are not
-idempotent). Fuzzed at every kill offset in
+stream collapses to). Folds are not idempotent, so the state carries a
+batch-id mark and the handler is `streaming/util.py:exactly_once_fold`
+— crash recovery, redelivery skip and staged commit in one place.
+Fuzzed at every kill offset in
 tests/test_incremental_holtwinters_stream.py.
 """
 
@@ -49,15 +49,18 @@ from economic_data_etl_spark.operators.holtwinters import (
     hw_fold,
     hw_init,
 )
-from economic_data_etl_spark.operators.io import commit_staged, recover_staging
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
+from economic_data_etl_spark.streaming.util import (
+    BatchMark,
+    exactly_once_fold,
+    read_data_rows,
+)
 
 STATE_SCHEMA = StructType(
     [
         StructField("event_type", StringType(), True),
         # warm-up buffer (< 2*M values so far); NULL once fitted
         StructField("buf", ArrayType(DoubleType(), True), True),
-        StructField("n", LongType(), True),  # days folded (meta: batch_id)
+        StructField("n", LongType(), True),  # days folded (mark: batch id)
         StructField("last_day", TimestampType(), True),
         StructField("level", DoubleType(), True),
         StructField("trend", DoubleType(), True),
@@ -66,14 +69,19 @@ STATE_SCHEMA = StructType(
 )
 
 _META = "\x00meta"
+MARK = BatchMark(
+    STATE_SCHEMA,
+    "event_type",
+    _META,
+    "n",
+    (_META, None, None, None, None, None, None),
+)
 
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The per-key state table without its meta row. NULL keys are
-    data (same contract as the CUSUM sink)."""
-    return read_parquet_or_empty(spark, state_dir, STATE_SCHEMA).filter(
-        F.col("event_type").isNull() | (F.col("event_type") != _META)
-    )
+    """The per-key state table without its mark row. NULL keys are
+    data."""
+    return read_data_rows(spark, state_dir, MARK)
 
 
 def forecast_now(
@@ -87,15 +95,6 @@ def forecast_now(
         F.col("level").isNotNull()
     )
     return forecast_from_state(fitted, horizon)
-
-
-def _last_batch_id(spark: SparkSession, state_dir: str) -> int:
-    rows = (
-        read_parquet_or_empty(spark, state_dir, STATE_SCHEMA)
-        .filter(F.col("event_type") == _META)
-        .collect()
-    )
-    return rows[0].n if rows else -1
 
 
 def _fold_batch(state: DataFrame, batch_daily: DataFrame) -> DataFrame:
@@ -205,28 +204,15 @@ def foreach_batch_incremental_holtwinters(
     day_col: str = "day",
     value_col: str = "total",
 ):
-    """Build the foreachBatch function over finalized daily-total rows.
-    Per micro-batch: skip if already folded (batch-id high-water mark —
-    folds are not idempotent), else fold each key's new days through
-    the recurrence and stage-swap the state."""
+    """Build the foreachBatch function over finalized daily-total rows:
+    fold each key's new days through the recurrence."""
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        recover_staging(state_dir)
-        if batch_id <= _last_batch_id(spark, state_dir):
-            return  # redelivered batch: already folded
+    def fold(state: DataFrame, batch_df: DataFrame) -> DataFrame:
         batch_daily = batch_df.select(
             F.col(key_col).alias("event_type"),
             F.col(day_col).alias("day"),
             F.col(value_col).alias("total"),
         )
-        merged = _fold_batch(
-            read_state(spark, state_dir), batch_daily
-        )
-        meta = spark.createDataFrame(
-            [(_META, None, batch_id, None, None, None, None)],
-            STATE_SCHEMA,
-        )
-        commit_staged(merged.unionByName(meta).write, state_dir)
+        return _fold_batch(state, batch_daily)
 
-    return handle
+    return exactly_once_fold(state_dir, MARK, fold)

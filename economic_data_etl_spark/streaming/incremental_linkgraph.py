@@ -46,8 +46,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from economic_data_etl_spark.operators.io import commit_staged, recover_staging
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
+from economic_data_etl_spark.operators.io import (
+    commit_staged,
+    read_parquet_or_empty,
+    recover_staging,
+)
 
 EDGES_SCHEMA = StructType(
     [

@@ -12,17 +12,14 @@ pure function of the standing counts. This is "the classifier
 retrains continuously" in its honest distributed form: no gradient
 state, no replay — counts in, model out.
 
-The two standard fences of the sink family apply:
-
-- the **batch-id high-water mark** fences redelivery (counts are
-  additive, NOT idempotent per row — the fence is load-bearing, as in
-  the LM sink);
-- the **staged commit** (`operators/io.py:commit_staged`, with
-  `recover_staging` before every read) leaves either the old or the
-  new state on a crash at any offset, never a torn one.
+The handler is `streaming/util.py:exactly_once_fold`: its batch-id
+mark fences redelivery (counts are additive, NOT idempotent per row —
+the fence is load-bearing, as in the LM sink), and its staged commit
+leaves either the old or the new state on a crash at any offset, never
+a torn one.
 
 State rows: kind 'w' = (lang, wd, c) token counts, kind 'd' =
-(lang, '', dc) doc counts, kind 'm' = the meta high-water mark. State
+(lang, '', dc) doc counts, kind 'm' = the batch-id mark. State
 is vocabulary x classes sized; the model prune keeps the SERVING
 broadcast config-bounded regardless of stream lifetime.
 
@@ -43,8 +40,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from economic_data_etl_spark.operators.io import commit_staged, recover_staging
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
+from economic_data_etl_spark.streaming.util import (
+    BatchMark,
+    exactly_once_fold,
+    read_data_rows,
+)
 
 STATE_SCHEMA = StructType(
     [
@@ -56,10 +56,15 @@ STATE_SCHEMA = StructType(
 )
 
 _META_KIND = "m"
+# batch-id mark row: (kind = 'm', lang = '', wd = '', c = batch id)
+MARK = BatchMark(
+    STATE_SCHEMA, "kind", _META_KIND, "c", (_META_KIND, "", "", None)
+)
 
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    return read_parquet_or_empty(spark, state_dir, STATE_SCHEMA)
+    """Both count kinds, without the mark row."""
+    return read_data_rows(spark, state_dir, MARK)
 
 
 def read_token_counts(
@@ -80,15 +85,6 @@ def read_doc_counts(spark: SparkSession, state_dir: str) -> dict:
         .filter(F.col("kind") == "d")
         .collect()
     }
-
-
-def last_batch_id(spark: SparkSession, state_dir: str) -> int:
-    rows = (
-        read_state(spark, state_dir)
-        .filter(F.col("kind") == _META_KIND)
-        .collect()
-    )
-    return rows[0].c if rows else -1
 
 
 def batch_state(batch_toks: DataFrame) -> DataFrame:
@@ -126,23 +122,10 @@ def foreach_batch_incremental_nb(state_dir: str):
     (doc_id, lang, w): fold the micro-batch's counts into the
     standing table."""
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        recover_staging(state_dir)
-        if batch_id <= last_batch_id(spark, state_dir):
-            return  # redelivery: additive counts must not re-fold
-        merged = fold_state(
-            read_state(spark, state_dir).filter(
-                F.col("kind") != _META_KIND
-            ),
-            batch_state(batch_df),
-        )
-        meta = spark.createDataFrame(
-            [(_META_KIND, "", "", batch_id)], STATE_SCHEMA
-        )
-        commit_staged(merged.unionByName(meta).write, state_dir)
+    def fold(state: DataFrame, batch_df: DataFrame) -> DataFrame:
+        return fold_state(state, batch_state(batch_df))
 
-    return handle
+    return exactly_once_fold(state_dir, MARK, fold)
 
 
 def erase_state(standing: DataFrame, revoked_toks: DataFrame) -> DataFrame:

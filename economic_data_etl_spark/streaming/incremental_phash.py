@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
+from economic_data_etl_spark.operators.io import read_parquet_or_empty
 
 IDX_SCHEMA = StructType(
     [
@@ -66,10 +66,7 @@ def read_index_erased(
     id. A doc's DERIVED media (recompression twins, keyframes) must be
     revoked with it — the caller maps doc ids to all media ids it
     planted/ingested for that doc, as governance_erasure_phash does."""
-    from economic_data_etl_spark.streaming.util import (
-        erase_ids,
-        read_parquet_or_empty,
-    )
+    from economic_data_etl_spark.streaming.util import erase_ids
 
     index = _read_index(spark, index_dir).dropDuplicates(["id"])
     pairs = read_parquet_or_empty(

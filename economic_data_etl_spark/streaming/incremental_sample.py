@@ -12,10 +12,10 @@ exactly the batch sample in any arrival order.
 Per batch: key the batch rows (one map expression), union with the
 standing <= k-row reservoir, dedupe by doc_id (a redelivered or
 overlapping doc carries the identical key, so re-folding is a no-op by
-construction — idempotence comes from the math, with the batch-id
-high-water mark kept as the family-standard second fence), trim to the
-k largest, stage + swap (trending-sink pattern incl. crash recovery).
-State is <= k+1 rows regardless of stream size.
+construction — idempotence comes from the math, with the batch-id mark
+of `streaming/util.py:exactly_once_fold` kept as a second fence), trim
+to the k largest, staged commit. State is <= k+1 rows regardless of
+stream size.
 """
 
 from __future__ import annotations
@@ -30,9 +30,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from economic_data_etl_spark.operators.io import commit_staged, recover_staging
 from economic_data_etl_spark.operators.training import hash_bucket
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
+from economic_data_etl_spark.streaming.util import (
+    BatchMark,
+    exactly_once_fold,
+    read_data_rows,
+)
 
 STATE_SCHEMA = StructType(
     [
@@ -40,12 +43,15 @@ STATE_SCHEMA = StructType(
         StructField("source", StringType(), True),
         StructField("weight", LongType(), True),
         StructField("rk", DoubleType(), True),
-        # one meta row: (doc_id = -1, rk NULL, bid = last_batch_id)
-        StructField("bid", LongType(), True),
+        StructField("bid", LongType(), True),  # NULL except on the mark
     ]
 )
 
 _META_ID = -1
+# batch-id mark row: (doc_id = -1, source/weight/rk NULL, bid = batch id)
+MARK = BatchMark(
+    STATE_SCHEMA, "doc_id", _META_ID, "bid", (_META_ID, None, None, None, None)
+)
 SALT = "wsample-v1"  # shared with curation_weighted_sample
 
 
@@ -69,11 +75,9 @@ def rank_keyed(
 
 
 def read_reservoir(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The standing sample rows (no meta row), unordered."""
-    return (
-        read_parquet_or_empty(spark, state_dir, STATE_SCHEMA)
-        .filter(F.col("doc_id") != _META_ID)
-        .select("doc_id", "source", "weight", "rk")
+    """The standing sample rows (no mark row), unordered."""
+    return read_data_rows(spark, state_dir, MARK).select(
+        "doc_id", "source", "weight", "rk"
     )
 
 
@@ -85,53 +89,20 @@ def sample_now(spark: SparkSession, state_dir: str) -> DataFrame:
     )
 
 
-def _last_batch_id(spark: SparkSession, state_dir: str) -> int:
-    rows = (
-        read_parquet_or_empty(spark, state_dir, STATE_SCHEMA)
-        .filter(F.col("doc_id") == _META_ID)
-        .collect()
-    )
-    return rows[0].bid if rows else -1
-
-
-def fold_batch(
-    spark: SparkSession,
-    state_dir: str,
-    keyed_batch: DataFrame,
-    k: int,
-    batch_id: int,
-) -> None:
-    """Merge one rank-keyed batch into the standing reservoir."""
-    recover_staging(state_dir)
-    if batch_id <= _last_batch_id(spark, state_dir):
-        return  # redelivered batch: already folded
-    merged = (
-        read_reservoir(spark, state_dir)
-        .unionByName(keyed_batch)
-        .dropDuplicates(["doc_id"])  # identical key either way
-        .orderBy(F.desc("rk"), "doc_id")
-        .limit(k)
-        .withColumn("bid", F.lit(None).cast("long"))
-    )
-    meta = spark.createDataFrame(
-        [(_META_ID, None, None, None, batch_id)], STATE_SCHEMA
-    )
-    commit_staged(merged.unionByName(meta).write, state_dir)
-
-
 def foreach_batch_incremental_sample(
     state_dir: str, k: int, weight_col: str = "n_chars"
 ):
     """foreachBatch sink: key the micro-batch and fold it into the
     standing <= k-row reservoir."""
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(
-            batch_df.sparkSession,
-            state_dir,
-            rank_keyed(batch_df, weight_col),
-            k,
-            batch_id,
+    def fold(reservoir: DataFrame, batch_df: DataFrame) -> DataFrame:
+        return (
+            reservoir.drop("bid")
+            .unionByName(rank_keyed(batch_df, weight_col))
+            .dropDuplicates(["doc_id"])  # identical key either way
+            .orderBy(F.desc("rk"), "doc_id")
+            .limit(k)
+            .withColumn("bid", F.lit(None).cast("long"))
         )
 
-    return handle
+    return exactly_once_fold(state_dir, MARK, fold)

@@ -34,8 +34,8 @@ from pyspark.sql.types import (
 )
 
 from economic_data_etl_spark.functions.vectors import dot_product, l2_normalize
+from economic_data_etl_spark.operators.io import read_parquet_or_empty
 from economic_data_etl_spark.operators.semantic import assign_clusters_cosine
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 # The index stores the L2-NORMALIZED vector at float64: pair scoring is
 # then one dot product per candidate (same normalize-then-dot order as

@@ -36,12 +36,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from economic_data_etl_spark.operators.io import commit_staged, recover_staging
+from economic_data_etl_spark.operators.io import (
+    commit_staged,
+    read_parquet_or_empty,
+    recover_staging,
+)
 from economic_data_etl_spark.operators.substring import (
     merge_spans,
     substring_incremental_dups_prov,
 )
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
 
 INDEX_SCHEMA = StructType(
     [

@@ -1,52 +1,108 @@
 """Shared helpers for the incremental/streaming sinks.
 
-One definition of the standing-index bootstrap read, used by all the
-foreachBatch sinks (MinHash, pHash, semantic, substring, heavy
-hitters). Previously each sink carried its own os.path.isdir copy,
-which (a) could drift, and (b) silently returned an EMPTY index for
-any non-local path (HDFS/S3) — marking nothing as duplicate instead of
-failing loudly. This version goes through Spark's own filesystem layer
-(works on any Hadoop-visible path) and treats ONLY a missing path as
-an empty index; every other failure (permissions, corrupt footer, a
-typo'd scheme) propagates.
+`exactly_once_fold` is the one foreachBatch sequence of the
+batch-marked sinks (CMS, KLL, KMV, CUSUM, Holt-Winters, LM, NB,
+weighted sample): each declares its `BatchMark` and its fold, and the
+helper owns recovery, the redelivery skip, the mark row and the staged
+commit. `read_data_rows` / `last_batch_id` are the one reader of such a
+state table. The erasure helpers below serve the standing indexes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from economic_data_etl_spark.operators.io import commit_staged, recover_staging
+from economic_data_etl_spark.operators.io import (
+    commit_staged,
+    read_parquet_or_empty,
+    recover_staging,
+)
 
-# Error-class fragments Spark raises for a nonexistent read path; both
-# the Spark-4 error-class name and the legacy message are matched so
-# the check survives version drift.
-_MISSING_PATH_MARKERS = ("PATH_NOT_FOUND", "Path does not exist")
 
+@dataclass(frozen=True)
+class BatchMark:
+    """Where a sink's state table records the last folded batch id.
 
-def read_parquet_or_empty(
-    spark: SparkSession, path: str, schema: StructType
-) -> DataFrame:
-    """Read a standing parquet index, or an empty DataFrame with the
-    same schema when the index has never been written.
+    The mark is one sentinel row IN the state table, so state and mark
+    are replaced together by one `commit_staged`: a crash can never
+    leave a folded state with a stale mark, or the reverse.
 
-    The read goes through spark.read (Hadoop FileSystem), so remote
-    paths (hdfs://, s3a://) work exactly like local ones. A missing
-    path — the legitimate "first batch ever" state — yields the empty
-    frame; anything else re-raises, so a misconfigured index path can
-    never silently behave as an empty index.
+    - `schema`: the state table's schema (StructType or DDL string);
+    - `col` / `value`: the sentinel that identifies the mark row (no
+      data row holds `value` in `col`; NULL in `col` is data);
+    - `id_col`: the column holding the batch id on the mark row;
+    - `row`: the mark row as written, its `id_col` slot filled per batch.
     """
-    from pyspark.errors import AnalysisException
 
-    try:
-        # DataFrameReader.parquet resolves the path eagerly, so a
-        # missing directory surfaces here, not at action time.
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as e:
-        if any(m in str(e) for m in _MISSING_PATH_MARKERS):
-            return spark.createDataFrame([], schema)
-        raise
+    schema: StructType | str
+    col: str
+    value: object
+    id_col: str
+    row: tuple
+
+
+def _is_mark(mark: BatchMark) -> Column:
+    # null-safe: a NULL key is data, never the mark row
+    return F.col(mark.col).eqNullSafe(F.lit(mark.value))
+
+
+def read_data_rows(
+    spark: SparkSession, state_dir: str, mark: BatchMark
+) -> DataFrame:
+    """The state table without its mark row (empty before the first
+    batch)."""
+    return read_parquet_or_empty(spark, state_dir, mark.schema).filter(
+        ~_is_mark(mark)
+    )
+
+
+def last_batch_id(
+    spark: SparkSession, state_dir: str, mark: BatchMark
+) -> int:
+    """The id of the last folded batch, -1 before the first."""
+    rows = (
+        read_parquet_or_empty(spark, state_dir, mark.schema)
+        .filter(_is_mark(mark))
+        .select(mark.id_col)
+        .collect()
+    )
+    return rows[0][0] if rows else -1
+
+
+def exactly_once_fold(
+    state_dir: str,
+    mark: BatchMark,
+    fold: Callable[[DataFrame, DataFrame], DataFrame],
+):
+    """The foreachBatch function of a batch-marked sink.
+
+    Per micro-batch: finish or roll back an interrupted commit, skip the
+    batch if its id is at or below the mark (redelivery under
+    foreachBatch's at-least-once contract), else
+    `fold(data_rows, batch_df)` — returning the new data rows in the
+    state schema — and commit them plus the new mark row with
+    `commit_staged`. Folds need not be idempotent.
+    """
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        recover_staging(state_dir)
+        if batch_id <= last_batch_id(spark, state_dir, mark):
+            return  # redelivered batch: already folded
+        merged = fold(read_data_rows(spark, state_dir, mark), batch_df)
+        row = spark.createDataFrame([mark.row], mark.schema)
+        row = row.withColumn(
+            mark.id_col,
+            F.lit(batch_id).cast(row.schema[mark.id_col].dataType),
+        )
+        commit_staged(merged.unionByName(row).write, state_dir)
+
+    return handle
 
 
 def erase_ids(df: DataFrame, ids: DataFrame, cols: list[str]) -> DataFrame:

@@ -120,10 +120,8 @@ class TestSemanticErasure:
             TOMBSTONES_SCHEMA,
             apply_erasure,
         )
-        from economic_data_etl_spark.streaming.util import (
-            erase_ids,
-            read_parquet_or_empty,
-        )
+        from economic_data_etl_spark.operators.io import read_parquet_or_empty
+        from economic_data_etl_spark.streaming.util import erase_ids
 
         for kill_at in range(1, 4):
             idx, pairs, tb = self._build(
@@ -359,7 +357,7 @@ class TestSubstringErasure:
             apply_erasure,
             read_index_erased,
         )
-        from economic_data_etl_spark.streaming.util import (
+        from economic_data_etl_spark.operators.io import (
             read_parquet_or_empty,
         )
 
@@ -480,7 +478,7 @@ class TestFrontierErasure:
             frontier_erasure_patch,
             read_frontier_erased,
         )
-        from economic_data_etl_spark.streaming.util import (
+        from economic_data_etl_spark.operators.io import (
             read_parquet_or_empty,
         )
 

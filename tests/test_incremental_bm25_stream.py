@@ -23,7 +23,7 @@ from economic_data_etl_spark.streaming.incremental_bm25 import (
     foreach_batch_incremental_bm25,
     read_index,
 )
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
+from economic_data_etl_spark.operators.io import read_parquet_or_empty
 
 SF_DIR = "/root/testdata/sf0.001"
 TERMS = ["stream", "batch", "window"]
@@ -295,7 +295,7 @@ class TestErasure:
             POSTINGS_SCHEMA,
             apply_erasure,
         )
-        from economic_data_etl_spark.streaming.util import (
+        from economic_data_etl_spark.operators.io import (
             read_parquet_or_empty,
         )
         import os

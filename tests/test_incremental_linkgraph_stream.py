@@ -22,7 +22,7 @@ from economic_data_etl_spark.streaming.incremental_linkgraph import (
     read_edges,
     read_edges_erased,
 )
-from economic_data_etl_spark.streaming.util import read_parquet_or_empty
+from economic_data_etl_spark.operators.io import read_parquet_or_empty
 
 N_DOCS = 64
 

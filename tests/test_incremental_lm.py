@@ -13,11 +13,12 @@ from economic_data_etl_spark.plans.lmppl import (
     token_arrays,
 )
 from economic_data_etl_spark.streaming.incremental_lm import (
+    MARK,
     foreach_batch_incremental_lm,
     fold_counts,
-    last_batch_id,
     read_counts,
 )
+from economic_data_etl_spark.streaming.util import last_batch_id
 
 
 def _docs(spark, rows):
@@ -53,7 +54,7 @@ def test_stream_fold_equals_one_shot(spark, tmp_path):
     want = _count_set(_one_shot(docs))
     got = _count_set(read_counts(spark, state))
     assert got == want
-    assert last_batch_id(spark, state) == 2
+    assert last_batch_id(spark, state, MARK) == 2
 
 
 def test_redelivery_is_fenced_not_absorbed(spark, tmp_path):
@@ -133,7 +134,7 @@ def test_completed_staging_promoted_on_recovery(spark, tmp_path):
     assert _count_set(read_counts(spark, state)) == _count_set(
         _one_shot(docs)
     )
-    assert last_batch_id(spark, state) == 1
+    assert last_batch_id(spark, state, MARK) == 1
     assert not os.path.exists(staging)
 
 
@@ -182,7 +183,7 @@ def test_crash_at_every_offset_converges(spark, tmp_path):
         _META_G,
         _META_ORD,
     )
-    from economic_data_etl_spark.streaming.util import (
+    from economic_data_etl_spark.operators.io import (
         read_parquet_or_empty,
     )
 
@@ -245,4 +246,4 @@ def test_crash_at_every_offset_converges(spark, tmp_path):
                 kill_batch,
                 mode,
             )
-            assert last_batch_id(spark, state) == len(batches) - 1
+            assert last_batch_id(spark, state, MARK) == len(batches) - 1

@@ -13,16 +13,17 @@ from economic_data_etl_spark.plans.classify import (
     nb_doc_counts,
 )
 from economic_data_etl_spark.streaming.incremental_nb import (
+    MARK,
     STATE_SCHEMA,
     _META_KIND,
     batch_state,
     fold_state,
     foreach_batch_incremental_nb,
-    last_batch_id,
     read_doc_counts,
     read_state,
     read_token_counts,
 )
+from economic_data_etl_spark.streaming.util import last_batch_id
 
 _ROWS = [
     (1, "en", "the cat sat"),
@@ -68,7 +69,7 @@ def test_stream_fold_equals_one_shot(spark, tmp_path):
         r["lang"]: r["dc"] for r in nb_doc_counts(toks).collect()
     }
     assert read_doc_counts(spark, state) == want_d
-    assert last_batch_id(spark, state) == 2
+    assert last_batch_id(spark, state, MARK) == 2
 
 
 def test_redelivery_fenced(spark, tmp_path):
@@ -133,7 +134,7 @@ def test_completed_staging_promoted(spark, tmp_path):
         (r["lang"], r["wd"], r["c"])
         for r in nb_counts(toks).collect()
     )
-    assert last_batch_id(spark, state) == 1
+    assert last_batch_id(spark, state, MARK) == 1
 
 
 def test_model_from_standing_state_classifies(spark, tmp_path):
@@ -191,7 +192,7 @@ def test_crash_at_every_offset_converges(spark, tmp_path):
     )
 
     def write_staging(state, staging, b, bi, complete):
-        from economic_data_etl_spark.streaming.util import (
+        from economic_data_etl_spark.operators.io import (
             read_parquet_or_empty,
         )
 
@@ -238,7 +239,7 @@ def test_crash_at_every_offset_converges(spark, tmp_path):
                 )
             )
             assert got == want, (kill_batch, mode)
-            assert last_batch_id(spark, state) == len(batches) - 1
+            assert last_batch_id(spark, state, MARK) == len(batches) - 1
 
 
 def test_erasure_equals_rebuild(spark):

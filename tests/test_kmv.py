@@ -25,7 +25,11 @@ def _df(spark, rows):
 
 
 def _sketch_set(df):
-    return sorted((r.grp, r.h) for r in df.collect())
+    # NULL groups sort first (None does not compare with str)
+    return sorted(
+        ((r.grp, r.h) for r in df.collect()),
+        key=lambda t: (t[0] is not None, t),
+    )
 
 
 def test_exact_below_k(spark):
@@ -68,9 +72,12 @@ def test_merge_equals_one_shot(spark):
 
 
 def test_stream_fold_equals_batch_and_redelivery_noop(spark, tmp_path):
-    rows = [("a", v) for v in range(300)] + [
-        ("b", v * 7) for v in range(250)
-    ]
+    # a NULL group is data: it must survive every fold and the read
+    rows = (
+        [("a", v) for v in range(300)]
+        + [("b", v * 7) for v in range(250)]
+        + [(None, v * 5) for v in range(200)]
+    )
     df = _df(spark, rows)
     state = str(tmp_path / "kmv")
     handle = foreach_batch_incremental_kmv(state, "key", "grp", K)

@@ -1,13 +1,11 @@
 """CUSUM mean-shift changepoint estimation over per-series daily totals.
 
-The analysis half of the incremental-CUSUM pair: `daily_totals` collapses
-a raw event volume to a days x types table (the ONLY pass that touches
-stream-scale data), and `cusum_from_daily` runs the changepoint scan as
-window passes over that tiny aggregate. The streaming sink
-(streaming/incremental_cusum.py) maintains the same daily table
-incrementally — daily totals are additive, so batch-wise folds equal the
-one-shot build up to float association — and serves this function at any
-point in the stream.
+`daily_totals` collapses a raw event volume to a days x types table (the
+ONLY pass that touches stream-scale data), and `cusum_from_daily` runs
+the changepoint scan as window passes over that tiny aggregate. Daily
+totals are additive, so a table folded batch by batch equals the
+one-shot build up to float association (the `ts_incremental_cusum`
+query), and this function serves either.
 
 Statistic: S_t = cumulative sum of (total_t - mean); the changepoint
 estimate is the day of max |S_t| (Page's CUSUM in its offline argmax

@@ -88,8 +88,8 @@ def _from_rows(pdf: pd.DataFrame):
 def merge_sketch_rows(pdf: pd.DataFrame, k: int = 256) -> pd.DataFrame:
     """Merge any number of serialized sketches (their rows concatenated
     into one frame): level lists concatenate, compaction counters add,
-    then one compression pass restores capacity. Associative — the
-    streaming sink folds batches through this exact function."""
+    then one compression pass restores capacity. Associative, so
+    batches can be folded through it in any grouping."""
     items = pdf[pdf["level"] >= 0]
     n_levels = int(items["level"].max()) + 1 if len(items) else 1
     levels = [

@@ -1,7 +1,5 @@
 """Link-graph Spark lanes: edge extraction over planted pages and the
-anchor-text aggregation — shared by the batch queries
-(plans/linkgraph.py) and the standing-index twins
-(streaming/incremental_linkgraph.py).
+anchor-text aggregation behind the batch queries (plans/linkgraph.py).
 
 The extraction lane is the certification harness: each doc is wrapped
 in its deterministic linked page (operators/html.py:write_linked_page)

@@ -20,11 +20,8 @@ serving shapes:
   lengths persist as the index, batches APPEND incrementally (an
   anti-join against the doc-length table keeps appends idempotent —
   an already-indexed document contributes nothing on redelivery), and
-  each query touches only its own terms' postings. Completes the
-  incremental-twin pattern next to the MinHash/pHash/semantic/
-  substring standing indexes (streaming/incremental_bm25.py is the
-  foreachBatch sink over the same layout). At 100 TB the postings
-  table is written partitioned/bucketed by token so a query's
+  each query touches only its own terms' postings. At 100 TB the
+  postings table is written partitioned/bucketed by token so a query's
   postings lookup prunes to its terms' buckets.
 
 Equivalence contract: scoring from an index built over the same

@@ -5,8 +5,7 @@ totals — the moving-average core of X-11, the method behind every
 Like operators/cusum.py, this consumes the (event_type, day, total)
 daily table, NOT raw events: one pre-aggregation collapses the stream-
 scale volume, and the decomposition is window passes over the tiny
-days x types aggregate. The same standing index the streaming CUSUM
-sink maintains (streaming/incremental_cusum.py) therefore serves BOTH
+days x types aggregate. One daily table therefore serves BOTH
 analyses — fold batches once, read changepoints and seasonally
 adjusted series from the same state.
 """

@@ -410,10 +410,8 @@ def semantic_incremental_pairs(
     """(id_a, id_b), id_a < id_b, for near-dup pairs with AT LEAST ONE
     side in `batch`: batch-vs-index plus batch-vs-batch, never
     index-vs-index — per-call work is |batch| × cluster occupancy, the
-    corpus (index) is re-scanned but never self-joined. The batch twin
-    of streaming/incremental_semantic.py (which additionally persists
-    the assignments); centroids must be the FROZEN set both sides were
-    assigned with.
+    corpus (index) is re-scanned but never self-joined. Centroids must
+    be the FROZEN set both sides were assigned with.
     """
     if not centroids:
         return batch.sparkSession.createDataFrame(

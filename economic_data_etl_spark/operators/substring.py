@@ -263,9 +263,7 @@ def gram_index_firsts(
 ) -> DataFrame:
     """The standing provenance gram index of a corpus: one row per
     distinct gram carrying its retained first occurrence —
-    (gram, first_id, first_pos), corpus order (id, pos). This is the
-    batch bootstrap of the layout the streaming twin
-    (streaming/incremental_substring.py) maintains."""
+    (gram, first_id, first_pos), corpus order (id, pos)."""
     occ = kgram_occurrences(docs, id_col, text_col, k)
     first_struct = F.min(
         F.struct(F.col(id_col).alias("i"), F.col("pos").alias("p"))
@@ -324,8 +322,7 @@ def erase_substring_index(
     surviving-corpus gram pass filtered to affected grams; nothing
     corpus² and no full re-tokenization of unaffected documents' state.
     Rebuild equivalence is value-checked by the
-    governance_erasure_substring oracle and crash-fuzzed in the
-    streaming twin's tests.
+    governance_erasure_substring oracle.
     """
     new_firsts, redo_spans = substring_erasure_patch(
         index, revoked, surviving_docs, id_col, text_col, k
@@ -361,8 +358,8 @@ def substring_erasure_patch(
 ) -> tuple[DataFrame, DataFrame]:
     """The REPLACEMENT rows an erasure must graft onto the standing
     substring state (steps 2–3 of erase_substring_index, exposed
-    separately so the streaming twin can persist them as its patch
-    tables before the tombstone commit point):
+    separately so a standing index can persist them as patch tables
+    before its tombstone commit point):
 
     - new firsts: for each gram whose retained first occurrence lives
       in a revoked doc, the earliest surviving occurrence (absent when

@@ -714,8 +714,8 @@ _INC_SPLIT = 400  # vec_id >= split = the "newly arrived" batch
     "the standing corpus — batch-vs-index and batch-vs-batch, never "
     "index-vs-index, so per-increment work is |batch| × cluster "
     "occupancy while history is never re-paired. Centroids are FROZEN "
-    "(first k of the original corpus) — the invariant the streaming "
-    "twin (streaming/incremental_semantic.py) relies on; "
+    "(first k of the original corpus) — the invariant a standing "
+    "index relies on; "
     "tests/test_semantic_dedup.py pins incremental ≡ full-minus-"
     "index-only-pairs.",
 )

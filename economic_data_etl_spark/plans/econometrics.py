@@ -487,9 +487,9 @@ _CUSUM_BATCHES = 3
     f"arrive in {_CUSUM_BATCHES} simulated micro-batches (split on "
     "event_id), each folded into per-batch (batch_id, series, day) "
     "partial aggregates; the middle batch is REDELIVERED and the "
-    "batch-id-keyed dedup drops the replay (the high-water-mark "
-    "semantics of streaming/incremental_cusum.py in driver-checkable "
-    "form). The merged index then serves the changepoint scan. The "
+    "batch-id-keyed dedup drops the replay (high-water-mark "
+    "semantics in driver-checkable form). The merged index then "
+    "serves the changepoint scan. The "
     "oracle is the FULL-DATA CUSUM SQL, so a green row proves the "
     "batch-wise fold equals the one-shot build at the value level — "
     "daily totals are additive, which is the whole trick: per batch "

@@ -23,10 +23,9 @@ can BE a gram's retained first occurrence — the first moves to the
 earliest surviving occurrence and that doc's spans are recomputed)
 and the crawl-frontier seen-set (a canonical's first_doc moves to the
 earliest surviving page, or leaves the seen-set so a re-crawl
-re-fetches). Streaming twins with tombstone-then-compact crash safety:
-streaming/incremental_{bm25,semantic,phash,substring,dedup}.py and
-streaming/crawl_frontier.py, fuzzed at every kill offset in
-tests/test_erasure_indexes.py.
+re-fetches). The crawl frontier's streaming sink
+(streaming/crawl_frontier.py) erases crash-safely and is fuzzed at
+every kill offset in tests/test_erasure_indexes.py.
 
 Scale shape: the revoked set is doc-keyed; anti-join erasure is one
 (broadcastable) anti-join per index table. The reassignment lanes add
@@ -282,7 +281,7 @@ def governance_erasure_phrase(
     "erased pairs. The oracle is a from-scratch SemDeDup pass over the "
     "reduced corpus under the SAME frozen centroids (seeded from the "
     "full corpus — the index's build-time contract; re-clustering is "
-    "the offline rebuild path, streaming/incremental_semantic.py). "
+    "the offline rebuild path). "
     "Green pins the sharp case: a revoked vector that was a pair's "
     "KEEPER (lower id) releases its surviving twin back into the keep "
     "set exactly as the rebuild does — the twin must vanish from this "
@@ -614,8 +613,7 @@ _GPH_TWIN = 1 << 40
     "partner count: a surviving twin host whose pair-source was "
     "revoked drops 1 → 0, and a surviving pair-source whose twin host "
     "was revoked likewise. Served counts come from the anti-join-"
-    "erased pairs table (streaming/util.py:erase_ids — the same step "
-    "the streaming twin's apply_erasure compacts); the oracle "
+    "erased pairs table (streaming/util.py:erase_ids); the oracle "
     "reconstructs the rebuild outcome arithmetically from the "
     "planting rule over the reduced corpus, so a stale pair, a "
     "missed erasure, or any false positive flips the value hash.",

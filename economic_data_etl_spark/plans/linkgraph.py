@@ -333,10 +333,8 @@ _ANCHOR_AGG_SQL = """
     "from the union. The oracle is the ONE-SHOT full-corpus "
     "aggregation — green means index-served == one-shot; a broken "
     "anti-join would double the redelivered docs' in-degree "
-    "contributions and fail the value hash. The streaming twin "
-    "(streaming/incremental_linkgraph.py) is proven stream == batch "
-    "with redelivery no-op in tests/test_incremental_linkgraph_"
-    "stream.py. Per-batch cost O(batch pages) + one anti-join; the "
+    "contributions and fail the value hash. Per-batch cost "
+    "O(batch pages) + one anti-join; the "
     "edge table never self-joins.",
 )
 def crawl_incremental_links(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -397,8 +395,7 @@ def crawl_incremental_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     "links); the oracle replays both filters, so the served "
     "anchor-text index's in-degree / n_src_hosts / top_anchor shifts "
     "are value-checked. Both anti-joins broadcast — the revoked set "
-    "is small by nature. Streaming twin with tombstone-then-compact "
-    "+ crash fuzz in tests/test_incremental_linkgraph_stream.py.",
+    "is small by nature.",
 )
 def governance_erasure_linkgraph(
     spark: SparkSession, sf_dir: str

@@ -799,15 +799,15 @@ _KMVI_OVERLAP = 400
 @register(
     "sketch_kmv_incremental",
     oracle=_kmv_rollup_oracle(),
-    doc="INCREMENTAL KMV (streaming/incremental_kmv.py): per-group "
+    doc="INCREMENTAL KMV: per-group "
     "k-minimum-values state is mergeable exactly like the weighted "
     "reservoir — the k smallest distinct hashes of a union come from "
     "the k smallest of each side, and the md5 hash is deterministic "
     "per key. A standing sketch is built from events below event_id "
     f"{_KMVI_SPLIT}, a batch covering event_id >= {_KMVI_OVERLAP} "
-    "folds in through the same union+distinct+trim merge the "
-    "streaming sink applies (the overlap is a simulated redelivery, a "
-    "no-op by the math), and the served rollup estimates are compared "
+    "folds in through a union+distinct+trim merge (the overlap is a "
+    "simulated redelivery, a no-op by the math), and the served "
+    "rollup estimates are compared "
     "against the FULL-corpus one-shot KMV oracle — a green row proves "
     "sketch-merge == batch sketch at the value level, per group AND "
     "at the merged ALL level.",

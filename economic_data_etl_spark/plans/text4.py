@@ -444,9 +444,7 @@ _BM25I_OVERLAP = 200  # overlap 200..249 exercises append idempotence
     "scoring equals the one-shot batch pass at the value level — the "
     "stream≡batch certificate in driver-checkable form. Per-batch cost "
     "is O(batch tokens) + one anti-join; queries read only their own "
-    "terms' postings (operators/retrieval.py:bm25_from_index; "
-    "streaming/incremental_bm25.py is the foreachBatch sink over the "
-    "same layout).",
+    "terms' postings (operators/retrieval.py:bm25_from_index).",
 )
 def text_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window

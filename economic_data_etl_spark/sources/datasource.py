@@ -21,7 +21,6 @@ from pathlib import Path
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
 )
 
@@ -61,46 +60,6 @@ class SnapshotReader(DataSourceReader):
             raise ValueError(f"unknown snapshot source {source!r} in {path.name}")
 
 
-class SnapshotStreamReader(DataSourceStreamReader):
-    """Streaming tail of the bronze snapshot directory.
-
-    `spark.readStream.format("economic_snapshots").load(dir)` — each
-    micro-batch picks up snapshot files not seen by any previous batch.
-    The offset is the SET of consumed file names (a JSON dict), so
-    recovery from a checkpoint is exact regardless of listing order or
-    clock skew, unlike an index/mtime watermark. The offset grows with
-    file count — fine for bronze drops (thousands); a production source
-    at millions of files would compact it into a manifest generation
-    number. Parsing reuses the batch reader, one partition per new file.
-    """
-
-    def __init__(self, options: dict):
-        self._batch = SnapshotReader(options)
-        self.root = self._batch.root
-
-    def initialOffset(self) -> dict:
-        return {"seen": []}
-
-    def latestOffset(self) -> dict:
-        return {"seen": sorted(str(f) for f in Path(self.root).glob("*.json"))}
-
-    def partitions(self, start: dict, end: dict):
-        new = sorted(set(end["seen"]) - set(start["seen"]))
-        # Zero-partition batches are disallowed; emit an empty marker.
-        return [SnapshotPartition(p) for p in new] or [SnapshotPartition("")]
-
-    def read(self, partition: SnapshotPartition):
-        if not partition.path:
-            return iter(())
-        return self._batch.read(partition)
-
-    def commit(self, end: dict) -> None:
-        pass  # nothing external to clean up; offsets live in the checkpoint
-
-    def stop(self) -> None:
-        pass
-
-
 class SnapshotDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -111,9 +70,6 @@ class SnapshotDataSource(DataSource):
 
     def reader(self, schema) -> SnapshotReader:
         return SnapshotReader(self.options)
-
-    def streamReader(self, schema) -> SnapshotStreamReader:
-        return SnapshotStreamReader(self.options)
 
 
 def register(spark) -> None:

@@ -6,8 +6,7 @@ is canonicalized (operators/urls.py) and checked against the set of
 URLs already seen; only new canonicals are emitted for fetching and
 added to the seen-set. foreachBatch + a parquet seen-index is the right
 Spark surface (the index outlives the stream — schedulers, re-crawl
-policies and audits read it), the same externalized-state shape as the
-other standing-index sinks (incremental_dedup/phash/semantic/substring).
+policies and audits read it).
 
 Per-batch cost is O(batch): canonicalize (pure JVM projection), one
 batch-local groupBy for first-occurrence, one anti-join against the
@@ -158,15 +157,13 @@ def apply_erasure(
 ) -> None:
     """Erase revoked docs from the standing seen-set AND the emitted
     frontier table (both are (canonical, first_doc) layouts, so one
-    patch serves both). Patch-then-tombstone-then-compact — the same
-    sequence and crash contract as the substring twin
-    (streaming/incremental_substring.py:apply_erasure): the patch lands
-    before the tombstone commit point; a replay that finds tombstones
-    present SKIPS patch computation (the on-disk patch is still valid
-    for that tombstone set, while recomputing against a mid-compacted
-    index would conclude nothing is affected); patches are cleared
-    after compaction, tombstones LAST. Fuzzed at every crash offset in
-    tests/test_crawl_frontier_stream.py."""
+    patch serves both). Patch-then-tombstone-then-compact: the patch
+    lands before the tombstone commit point; a replay that finds
+    tombstones present SKIPS patch computation (the on-disk patch is
+    still valid for that tombstone set, while recomputing against a
+    mid-compacted index would conclude nothing is affected); patches
+    are cleared after compaction, tombstones LAST. Fuzzed at every
+    crash offset in tests/test_crawl_frontier_stream.py."""
     import os
     import shutil
 

@@ -15,7 +15,7 @@ crash at any offset, never a torn one.
 
 State is vocabulary-sized (all grams seen so far, orders 1-3), the
 same growth class as the standing BM25 postings
-(streaming/incremental_bm25.py); serving prunes to the top-K per
+(operators/retrieval.py); serving prunes to the top-K per
 order, so the broadcast stays config-bounded regardless of how long
 the stream has run.
 """

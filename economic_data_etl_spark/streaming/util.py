@@ -1,11 +1,11 @@
 """Shared helpers for the incremental/streaming sinks.
 
 `exactly_once_fold` is the one foreachBatch sequence of the
-batch-marked sinks (CMS, KLL, KMV, CUSUM, Holt-Winters, LM, NB,
-weighted sample): each declares its `BatchMark` and its fold, and the
-helper owns recovery, the redelivery skip, the mark row and the staged
-commit. `read_data_rows` / `last_batch_id` are the one reader of such a
-state table. The erasure helpers below serve the standing indexes.
+batch-marked sinks (Holt-Winters, LM, NB, weighted sample): each
+declares its `BatchMark` and its fold, and the helper owns recovery,
+the redelivery skip, the mark row and the staged commit.
+`read_data_rows` / `last_batch_id` are the one reader of such a state
+table. `erase_ids` is the masking step of the erasure paths.
 """
 
 from __future__ import annotations
@@ -120,52 +120,4 @@ def erase_ids(df: DataFrame, ids: DataFrame, cols: list[str]) -> DataFrame:
         )
     # a join moves its key to the front — restore the caller's order
     return df.select(*out_cols)
-
-
-def tombstone_then_compact(
-    spark: SparkSession,
-    tombstones_dir: str,
-    tombstones_schema: StructType,
-    revoked: DataFrame,
-    tables: list[tuple[str, StructType, list[str]]],
-) -> None:
-    """The shared tombstone-then-compact erasure sequence for standing
-    indexes whose erasure is a pure per-table anti-join (BM25-shaped:
-    semantic pairs/assignments, pHash fingerprints/pairs). For indexes
-    that must REASSIGN state to survivors (substring gram firsts, crawl
-    frontier firsts) see their modules' patch-carrying variants.
-
-    1. APPEND revoked ids to the tombstone table — the commit point;
-       the caller's read_*_erased masks every table from here on, and
-       a replayed append only adds duplicate tombstone rows.
-    2. Compact each table in turn: anti-join rewrite committed with
-       `commit_staged` (operators/io.py), after `recover_staging` has
-       finished or rolled back any interrupted commit. Re-erasing
-       already-compacted rows is a no-op, so any crash+replay
-       interleaving converges.
-    3. Clear the tombstone table LAST — until then it keeps masking.
-
-    `tables`: (path, schema, match_cols) — a row is erased when any of
-    match_cols holds a tombstoned id.
-    """
-    import shutil
-
-    id_col = tombstones_schema.fieldNames()[0]
-    ids = revoked.select(
-        F.col(revoked.columns[0])
-        .cast(tombstones_schema[id_col].dataType)
-        .alias(id_col)
-    )
-    ids.write.mode("append").parquet(tombstones_dir)  # commit point
-
-    tombs = read_parquet_or_empty(
-        spark, tombstones_dir, tombstones_schema
-    ).dropDuplicates([id_col])
-    for path, schema, cols in tables:
-        recover_staging(path)
-        kept = erase_ids(
-            read_parquet_or_empty(spark, path, schema), tombs, cols
-        )
-        commit_staged(kept.write, path)
-    shutil.rmtree(tombstones_dir)  # cleared last
 

@@ -47,46 +47,6 @@ class TestSnapshotDataSource:
             got_name, got_value, got_source = rows[(r["series_id"], r["date"])]
             assert (got_value, got_source) == (r["value"], "BLS")
 
-    def test_stream_reader_tails_new_snapshots(self, spark, tmp_path):
-        """The streaming surface of the same source: first run consumes
-        the initial drop; after a NEW snapshot lands, a second run from
-        the same checkpoint reads only the new file."""
-        src = tmp_path / "bronze"
-        src.mkdir()
-        ckpt = str(tmp_path / "ckpt")
-        (src / "FRED_UNRATE_2024_01_15.json").write_text(
-            json.dumps(RAW_FRED_JSON)
-        )
-        register(spark)
-
-        out = str(tmp_path / "out")
-
-        def run_once():
-            q = (
-                spark.readStream.format("economic_snapshots")
-                .load(str(src))
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return spark.read.parquet(out).collect()
-
-        first = run_once()
-        assert {r["source"] for r in first} == {"FRED"}
-        n_first = len(first)
-        assert n_first == 4
-
-        (src / "BLS_batch_2024_01_16.json").write_text(json.dumps(RAW_BLS_JSON))
-        second = run_once()
-        # memory sink accumulates across restarts within the session:
-        # total = first drop + only the new file's rows (no re-read)
-        assert len(second) == n_first + 5
-        assert {r["source"] for r in second} == {"FRED", "BLS"}
-
     def test_partitioned_by_file(self, spark, tmp_path):
         for i in range(3):
             (tmp_path / f"FRED_S{i}_2024_01_15.json").write_text(

@@ -1,7 +1,5 @@
-"""KMV sketch (operators/kmv.py + streaming/incremental_kmv.py):
-exactness below k, estimator accuracy above k, merge == one-shot,
-NULL exclusion, and the streaming fold's stream==batch / redelivery /
-crash-recovery contracts."""
+"""KMV sketch (operators/kmv.py): exactness below k, estimator accuracy
+above k, merge == one-shot, NULL exclusion."""
 
 from __future__ import annotations
 
@@ -12,10 +10,6 @@ from economic_data_etl_spark.operators.kmv import (
     kmv_merge,
     kmv_sketch_by,
 )
-from economic_data_etl_spark.streaming.incremental_kmv import (
-    foreach_batch_incremental_kmv,
-    read_sketches,
-)
 
 K = 32
 
@@ -25,11 +19,7 @@ def _df(spark, rows):
 
 
 def _sketch_set(df):
-    # NULL groups sort first (None does not compare with str)
-    return sorted(
-        ((r.grp, r.h) for r in df.collect()),
-        key=lambda t: (t[0] is not None, t),
-    )
+    return sorted((r.grp, r.h) for r in df.collect())
 
 
 def test_exact_below_k(spark):
@@ -70,50 +60,3 @@ def test_merge_equals_one_shot(spark):
         one_shot.select(F.lit("ALL").alias("grp"), "h")
     )
 
-
-def test_stream_fold_equals_batch_and_redelivery_noop(spark, tmp_path):
-    # a NULL group is data: it must survive every fold and the read
-    rows = (
-        [("a", v) for v in range(300)]
-        + [("b", v * 7) for v in range(250)]
-        + [(None, v * 5) for v in range(200)]
-    )
-    df = _df(spark, rows)
-    state = str(tmp_path / "kmv")
-    handle = foreach_batch_incremental_kmv(state, "key", "grp", K)
-    batches = [df.filter(F.col("key") % 3 == b) for b in range(3)]
-    for bi, b in enumerate(batches):
-        handle(b, bi)
-    want = _sketch_set(
-        kmv_sketch_by(df, "key", "grp", K).select("grp", "h")
-    )
-    got = _sketch_set(read_sketches(spark, state, K).select("grp", "h"))
-    assert got == want
-    handle(batches[0], 0)  # exact redelivery: high-water mark skip
-    handle(batches[1], 99)  # overlap under a new id: no-op by the math
-    assert (
-        _sketch_set(read_sketches(spark, state, K).select("grp", "h"))
-        == want
-    )
-
-
-def test_partial_staging_discarded(spark, tmp_path):
-    import os
-
-    rows = [("a", v) for v in range(200)]
-    df = _df(spark, rows)
-    state = str(tmp_path / "kmv")
-    staging = f"{state}.staging"
-    os.makedirs(staging, exist_ok=True)
-    with open(os.path.join(staging, "part-0.parquet"), "wb") as f:
-        f.write(b"mid-write crash leftovers")
-    handle = foreach_batch_incremental_kmv(state, "key", "grp", K)
-    handle(df, 0)
-    want = _sketch_set(
-        kmv_sketch_by(df, "key", "grp", K).select("grp", "h")
-    )
-    assert (
-        _sketch_set(read_sketches(spark, state, K).select("grp", "h"))
-        == want
-    )
-    assert not os.path.exists(staging)

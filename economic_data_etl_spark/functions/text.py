@@ -185,17 +185,3 @@ def dup_ngram_frac(text: Column, n: int = 2) -> Column:
     return F.when(
         total > 0, F.lit(1.0) - F.size(F.array_distinct(grams)) / total
     ).otherwise(F.lit(0.0))
-
-
-def rolling_fingerprint(text: Column) -> Column:
-    """Order-sensitive 64-bit document fingerprint (polynomial rolling hash
-    over whitespace tokens, base 31, wrapping in signed 64-bit).
-
-    fp = sum_i token_hash(t_i) * 31^(i) is order-sensitive because we fold
-    left with acc*31 + h(tok). Pure expression via aggregate().
-    """
-    return F.aggregate(
-        tokens(text),
-        F.lit(0).cast("long"),
-        lambda acc, t: acc * F.lit(31).cast("long") + F.xxhash64(t),
-    )

@@ -41,7 +41,7 @@ inv_bpe_conservation):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from economic_data_etl_spark.functions.text import WORD_SPLIT_RE
@@ -212,14 +212,3 @@ def tokenize_stats(
     return cols.repartition(
         spark.sparkContext.defaultParallelism
     ).mapInPandas(batch, schema)
-
-
-def train_and_stats(
-    spark: SparkSession,
-    docs: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 30,
-    max_words: int = 65536,
-) -> tuple[list[tuple[str, str, int]], DataFrame]:
-    merges = train_bpe_merges(docs, text_col, num_merges, max_words)
-    return merges, tokenize_stats(docs, merges, text_col)

@@ -2,9 +2,8 @@
 
 Design for 100 TB:
 
-- **Exact**: `dropDuplicates` on a content hash — one shuffle on the hash,
-  map-side partial dedup first. Never compares full payloads across the
-  wire; `sha2(text)` is computed in the scan stage.
+- **Exact**: `dropDuplicates` on the key columns — one shuffle, map-side
+  partial dedup first.
 - **Jaccard via inverted index**: explode distinct shingles, self-join on
   the shingle (the inverted-index trick), count intersections, compute
   |A∩B| / (|A|+|B|-|A∩B|). Avoids the O(n²) doc-pair cross join; the only
@@ -45,18 +44,6 @@ from economic_data_etl_spark.plans.catalog import biased_round
 def exact_dedup(df: DataFrame, cols: list[str]) -> DataFrame:
     """Keep one row per distinct value of `cols` (arbitrary survivor)."""
     return df.dropDuplicates(cols)
-
-
-def exact_dedup_by_hash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Deterministic-survivor exact dedup: group by sha2(text), keep the
-    row with the smallest id. Hash-groupBy rather than sorting payloads."""
-    h = F.sha2(F.col(text_col), 256).alias("__h")
-    return (
-        df.select(h, id_col)
-        .groupBy("__h")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
-        .drop("__h")
-    )
 
 
 # --------------------------------------------------------------------------

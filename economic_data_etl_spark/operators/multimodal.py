@@ -208,41 +208,6 @@ def build_sample_container(doc_id: int) -> bytes:
     )
 
 
-def decode_container_metadata(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """mapInPandas over binary payloads → parsed container metadata
-    (parse_container_header per payload, Arrow-batched)."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [
-                parse_container_header(bytes(p)) for p in pdf[payload_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "format": [m["format"] for m in metas],
-                    "width": pd.array(
-                        [m["width"] for m in metas], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [m["height"] for m in metas], dtype="Int32"
-                    ),
-                    "sample_rate": pd.array(
-                        [m["sample_rate"] for m in metas], dtype="Int32"
-                    ),
-                    "channels": pd.array(
-                        [m["channels"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        decode, CONTAINER_META_SCHEMA
-    )
-
-
 RESIZED_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),

@@ -132,22 +132,6 @@ def _srp_table_codes_udf(planes: list[list[float]], bits: int, tables: int):
     return encode
 
 
-def srp_code(vec: Column, planes: list[list[float]]) -> Column:
-    """Integer LSH code: bit j = sign(vec · plane_j) — pure expression."""
-    code = F.lit(0).cast("long")
-    v = vec.cast("array<double>")
-    for j, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(v, F.array(*[F.lit(x) for x in plane]), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        code = code + F.when(dot >= 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return code
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -8,6 +8,8 @@ local[32] testing:
   schema (region/nation/customer/supplier/part at reasonable SF) should hash
   to the build side without a shuffle.
 - Arrow transfer on, so the few Pandas-UDF code paths are vectorized.
+  The refresh's local fact and dim frames are Arrow tables
+  (`sources/transforms.local_frame`) whatever this conf says.
 - Session timezone pinned to UTC so timestamp semantics are stable across
   environments (parquet stores UTC instants).
 

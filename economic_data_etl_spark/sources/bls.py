@@ -12,8 +12,10 @@ crash constructing month 13 (/root/reference/src/transform.py:61, SURVEY.md
 §2.8 F3). We keep only true monthly observations `M01..M12`.
 
 `bls_rows` is the one BLS parser: the in-memory path (`parse_bls_batch`)
-builds its DataFrame from it and the bronze snapshot DataSource
-(sources/datasource.py) yields from it.
+builds its DataFrame from its rows with the shared
+`transforms.local_frame` (one Arrow table, no Python worker) and the
+bronze snapshot DataSource (sources/datasource.py) yields from it.
+`build_dim_series` builds the dim frame with the same helper.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from economic_data_etl_spark.schemas import DIM_SCHEMA, FACT_SCHEMA
-from economic_data_etl_spark.sources.transforms import fact_value
+from economic_data_etl_spark.sources.transforms import fact_value, local_frame
 
 # Monthly observations only; M13 (annual avg) and Q/S periods are
 # different grains and would corrupt a monthly fact table.
@@ -70,7 +72,7 @@ def parse_bls_batch(
     id_to_name = {sid: name for name, sid in series_map.items()}
     # API returns most-recent-first; contract is oldest-first
     rows = sorted(bls_rows(payload, id_to_name), key=itemgetter(2))
-    return spark.createDataFrame(rows, FACT_SCHEMA)
+    return local_frame(spark, rows, FACT_SCHEMA)
 
 
 def build_dim_series(
@@ -83,4 +85,4 @@ def build_dim_series(
     rows = [(sid, name, "FRED") for name, sid in fred_series.items()] + [
         (sid, name, "BLS") for name, sid in bls_series.items()
     ]
-    return spark.createDataFrame(rows, DIM_SCHEMA)
+    return local_frame(spark, rows, DIM_SCHEMA)

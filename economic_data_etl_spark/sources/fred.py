@@ -7,9 +7,10 @@ series literals, and emit the canonical 5-column fact schema
 (/root/reference/src/transform.py:30).
 
 `fred_rows` is the one FRED parser: the in-memory path
-(`parse_fred_observations`) builds its DataFrame from it and the bronze
-snapshot DataSource (sources/datasource.py) yields from it, so both
-paths apply the same rules by construction.
+(`parse_fred_observations`) builds its DataFrame from its rows with the
+shared `transforms.local_frame` (one Arrow table, no Python worker) and
+the bronze snapshot DataSource (sources/datasource.py) yields from it,
+so both paths apply the same rules by construction.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from economic_data_etl_spark.schemas import FACT_SCHEMA
-from economic_data_etl_spark.sources.transforms import fact_value
+from economic_data_etl_spark.sources.transforms import fact_value, local_frame
 
 _ISO_DATE = re.compile(r"\d{4}-\d{2}-\d{2}", re.ASCII)
 
@@ -65,4 +66,4 @@ def parse_fred_observations(
 ) -> DataFrame:
     """Raw FRED payload → fact rows (series_id, series_name, date, value,
     source), parsed by `fred_rows`."""
-    return spark.createDataFrame(list(fred_rows(payload, series_id, series_name)), FACT_SCHEMA)
+    return local_frame(spark, list(fred_rows(payload, series_id, series_name)), FACT_SCHEMA)

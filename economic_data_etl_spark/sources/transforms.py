@@ -1,6 +1,7 @@
 """Fact-table transforms shared by both sources: the observation value
-rule and the combiner (reference parity: transform.py's value coercion
-and combine_fact_tables, reference src/transform.py:24,62,97-115)."""
+rule, the rows → DataFrame step and the combiner (reference parity:
+transform.py's value coercion and combine_fact_tables, reference
+src/transform.py:24,62,97-115)."""
 
 from __future__ import annotations
 
@@ -8,8 +9,11 @@ import functools
 import re
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # Plain ASCII decimal or scientific notation, or inf/infinity/nan, each
 # with an optional sign. Spellings only one runtime reads as a number are
@@ -28,6 +32,24 @@ def fact_value(raw: str | None) -> float | None:
         return None
     s = str(raw).strip()
     return float(s) if _NUMBER.fullmatch(s) else None
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: StructType) -> DataFrame:
+    """Driver-side rows → DataFrame through one Arrow table.
+
+    The JVM reads the Arrow batches itself, so no Python worker runs
+    when the frame is computed (a list-of-tuples frame pays a fixed
+    Python-task cost per partition). Columns are built straight from
+    the tuples, not through pandas, so a NULL value stays distinct from
+    a NaN. Arrow rejects a NULL in a non-nullable field.
+    """
+    arrow_schema = to_arrow_schema(schema)
+    if rows:
+        columns = [pa.array(col, f.type) for col, f in zip(zip(*rows), arrow_schema)]
+        table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    else:
+        table = arrow_schema.empty_table()
+    return spark.createDataFrame(table, schema)
 
 
 def combine_fact_tables(frames: Sequence[DataFrame]) -> DataFrame:

@@ -4,13 +4,14 @@ the reference (file:line cited per test), re-expressed over DataFrames."""
 from __future__ import annotations
 
 import datetime
+from pathlib import Path
 
 import pytest
 
-from economic_data_etl_spark.schemas import FACT_COLUMNS
+from economic_data_etl_spark.schemas import DIM_SCHEMA, FACT_COLUMNS, FACT_SCHEMA
 from economic_data_etl_spark.sources.bls import build_dim_series, parse_bls_batch
 from economic_data_etl_spark.sources.fred import parse_fred_observations
-from economic_data_etl_spark.sources.transforms import combine_fact_tables
+from economic_data_etl_spark.sources.transforms import combine_fact_tables, local_frame
 from tests.fixtures_ref import BLS_SERIES_MAP, RAW_BLS_JSON, RAW_FRED_JSON
 
 
@@ -129,3 +130,69 @@ class TestCombine:
     def test_empty_input_raises(self, spark):
         with pytest.raises(ValueError):
             combine_fact_tables([])
+
+
+# --- local frames: one Arrow table each, read by the JVM ------------------
+def _lineage(df) -> str:
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+class TestLocalFrames:
+    BUILDERS = {
+        "fred": lambda spark: parse_fred_observations(spark, RAW_FRED_JSON, "UNRATE", "u"),
+        "bls": lambda spark: parse_bls_batch(spark, RAW_BLS_JSON, BLS_SERIES_MAP),
+        "dim": lambda spark: build_dim_series(spark, {"a": "A1"}, {"c": "C1"}),
+    }
+
+    @pytest.mark.parametrize("builder", sorted(BUILDERS))
+    def test_no_python_worker_in_lineage(self, spark, builder):
+        lineage = _lineage(self.BUILDERS[builder](spark))
+        assert "ParallelCollectionRDD" in lineage
+        assert "PythonRDD" not in lineage
+
+    def test_one_local_frame_builder(self):
+        """Outside the shared helper no source module builds a frame
+        from driver-side rows."""
+        import economic_data_etl_spark.sources as sources
+
+        root = Path(sources.__file__).parent
+        offenders = []
+        for py in sorted(root.rglob("*.py")):
+            in_helper = False
+            for n, line in enumerate(py.read_text().splitlines(), 1):
+                if line.startswith("def "):
+                    in_helper = py.name == "transforms.py" and line.startswith("def local_frame(")
+                if "createDataFrame(" in line and not in_helper:
+                    offenders.append(f"{py.relative_to(root)}:{n}")
+        assert offenders == []
+
+    def test_empty_fred_payload_keeps_fact_schema(self, spark):
+        df = parse_fred_observations(spark, {"observations": []}, "UNRATE", "u")
+        assert df.schema == FACT_SCHEMA
+        assert df.collect() == []
+
+    def test_bls_batch_without_monthly_points_keeps_fact_schema(self, spark):
+        payload = {
+            "status": "REQUEST_SUCCEEDED",
+            "Results": {
+                "series": [
+                    {
+                        "seriesID": "CES0000000001",
+                        "data": [
+                            {"year": "2023", "period": p, "value": "1.0"}
+                            for p in ("M13", "Q01", "S01")
+                        ],
+                    }
+                ]
+            },
+        }
+        df = parse_bls_batch(spark, payload, BLS_SERIES_MAP)
+        assert df.schema == FACT_SCHEMA
+        assert df.collect() == []
+
+    def test_dim_schema(self, spark):
+        assert build_dim_series(spark, {"a": "A1"}, {"c": "C1"}).schema == DIM_SCHEMA
+
+    def test_null_in_non_nullable_field_raises(self, spark):
+        with pytest.raises(ValueError, match="series_id"):
+            local_frame(spark, [(None, "a", "FRED")], DIM_SCHEMA)

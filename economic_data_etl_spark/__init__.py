@@ -18,7 +18,7 @@ Layout:
                 as-of & range joins, top-k, Z-order clustering,
                 training-data ops (splits, mixing, packing, hashed TF)
     plans/      the query catalog exposed through __spark_entry__
-    streaming/  Structured Streaming windows + stateful ops
+    streaming/  pure batch folds of the incremental catalog queries
 """
 
 __version__ = "0.1.0"

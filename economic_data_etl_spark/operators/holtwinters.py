@@ -68,8 +68,8 @@ def hw_init(y: Column) -> Column:
 
 def hw_step(acc: Column, yv: Column) -> Column:
     """One observation through the additive recurrence — the fold step
-    shared by the one-shot fit and the streaming per-batch fold, so
-    stream == batch is bit-exact by construction."""
+    shared by the one-shot fit and the incremental per-batch fold, so
+    fold == batch is bit-exact by construction."""
     j = acc["t"] % M  # 0-based seasonal slot of this position
     s_j = F.element_at(acc["s"], j + 1)
     l_new = F.lit(ALPHA) * (yv - s_j) + F.lit(ONE_M_ALPHA) * (
@@ -156,8 +156,8 @@ def forecast_from_state(
     st: DataFrame, horizon: int = M, key_col: str = "event_type"
 ) -> DataFrame:
     """Forecast from a fitted state table (key, n, last_day, level,
-    trend, s) — shared by the one-shot fit and the streaming state
-    store (streaming/incremental_holtwinters.py:forecast_now)."""
+    trend, s) — shared by the one-shot fit and the incremental fold
+    state (streaming/incremental_holtwinters.py:_fold_batch)."""
     hs = F.explode(F.sequence(F.lit(1), F.lit(horizon))).alias("h")
     ex = st.select(key_col, "n", "last_day", "level", "trend", "s", hs)
     yhat = (
@@ -166,7 +166,7 @@ def forecast_from_state(
         + F.element_at(
             F.col("s"),
             # cast: n is INT from the one-shot fit (array size) but
-            # LONG from the streaming state store; element_at's index
+            # LONG from the incremental fold state; element_at's index
             # must be INT either way
             (((F.col("n") + F.col("h") - 1) % M) + 1).cast("int"),
         )

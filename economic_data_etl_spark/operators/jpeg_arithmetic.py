@@ -467,12 +467,6 @@ def _decode_ac(
 # Block transform (shared math with the baseline codec — identical
 # quantization means identical decoded pixels, the certification hook)
 # --------------------------------------------------------------------------
-def _quantize_block(block: np.ndarray, qtab: np.ndarray) -> list[int]:
-    coeff = _M @ (block - 128.0) @ _M.T
-    levels = _round_half_up(coeff / qtab).astype(np.int64)
-    return [int(v) for v in levels.ravel()[_ZIG_FLAT]]
-
-
 def _dequantize_block(zz: list[int], qtab: np.ndarray) -> np.ndarray:
     levels = np.zeros(64, dtype=np.int64)
     levels[_ZIG_FLAT] = zz

@@ -34,7 +34,6 @@ import struct
 import numpy as np
 
 from economic_data_etl_spark.operators.jpeg import (
-    _BitReader,
     _BitWriter,
     _bit_windows,
     _canonical_codes,
@@ -112,18 +111,6 @@ def _encode_diff(writer: _BitWriter, diff: int) -> None:
     code, length = _LL_ENC[size]
     writer.write(code, length)
     writer.write(bits, size)
-
-
-def _decode_diff(reader: _BitReader, table: dict) -> int:
-    size = reader.read_symbol(table)
-    if size == 16:
-        return 32768  # == -32768 mod 2^16
-    if size == 0:
-        return 0
-    bits = reader.read_bits(size)
-    if bits < (1 << (size - 1)):
-        return bits - (1 << size) + 1
-    return bits
 
 
 _LL_CODE_ARR = np.array([_LL_ENC[s][0] for s in range(17)], np.int64)

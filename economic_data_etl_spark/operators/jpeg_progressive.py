@@ -154,12 +154,6 @@ def _mcu_units(mh, mw, comps):
     return units
 
 
-def _mcu_blocks(mh, mw, comps):
-    """Yield (ci, by, bx) flat across the interleaved MCU walk."""
-    for unit in _mcu_units(mh, mw, comps):
-        yield from unit
-
-
 def _restart_due(i: int, ri: int) -> int | None:
     """RSTn number before unit `i` (None if no restart falls here)."""
     if ri and i and i % ri == 0:

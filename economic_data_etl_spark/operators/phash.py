@@ -96,11 +96,6 @@ def phash64(img: np.ndarray) -> int:
     return v
 
 
-def hamming64(a, b):
-    """JVM-side hamming distance between two 64-bit hash columns."""
-    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
-
-
 def near_dup_pairs_by_phash(
     hashes: DataFrame,
     id_col: str = "id",

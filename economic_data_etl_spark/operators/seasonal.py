@@ -40,8 +40,7 @@ def seasonal_from_daily(
     not vanish. The input should be materialized (the decomposition
     joins the daily table against indices derived from it, so an
     unbroken lineage would recompute the upstream twice —
-    plans/econometrics.py localCheckpoints, the streaming index is
-    already parquet)."""
+    plans/econometrics.py localCheckpoints)."""
     if period % 2 == 0:
         # An even centered MA needs the classical 2x`period` double
         # moving average; a naive period//2 half-window would span

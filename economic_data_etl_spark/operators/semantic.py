@@ -801,104 +801,3 @@ def semantic_near_dup_pairs_from_bucketed(
         .select("id_a", "id_b")
     )
 
-
-def append_assignment_bucketed(
-    batch: DataFrame,
-    centroids: list[list[float]],
-    table_name: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probes: int = 3,
-    num_buckets: int = 16,
-) -> None:
-    """Append a new batch's multi-probe assignment to an EXISTING
-    cluster-bucketed layout without rewriting it — the maintenance
-    operation that makes the layout economical: write the corpus once,
-    append each ingest increment (bucketed the same way), and every
-    subsequent dedup pass still joins Exchange-free. `centroids` must
-    be the FROZEN set the table was built with (the incremental-dedup
-    contract shared with semantic_incremental_pairs).
-
-    Append goes through saveAsTable with the SAME bucketBy spec: Spark
-    hash-distributes the new rows into per-append bucket files and
-    refuses a mismatched spec, so the table's HashPartitioning
-    guarantee survives every increment (plan re-pinned after append in
-    tests/test_plan_shapes.py). Bucket file count grows by num_buckets
-    per append — at warehouse scale periodic compaction (rewrite via
-    write_assignment_bucketed) bounds small-file overhead, exactly the
-    maintenance cycle any bucketed fact table runs.
-    """
-    assigned = _bucketed_assignment_rows(
-        batch, centroids, id_col, vec_col, probes
-    ).repartition(num_buckets, F.col("cluster"))  # one file per bucket
-    assigned.write.mode("append").bucketBy(
-        num_buckets, "cluster"
-    ).saveAsTable(table_name)
-
-
-def compact_assignment_bucketed(
-    spark,
-    table_name: str,
-    num_buckets: int = 16,
-) -> None:
-    """Compact an appended-to cluster-bucketed layout back to ONE file
-    per non-empty bucket — the periodic maintenance step that bounds
-    the small-file growth append_assignment_bucketed accrues
-    (num_buckets files per append).
-
-    The rewrite stages the table's rows (already assigned + normalized
-    — no centroid work repeats) into `<table>_compacting` with the
-    SAME bucket spec, then rewrites `table_name` from the stage and
-    drops it. Rows only move within their bucket, so the pair pass
-    against the compacted table is bitwise the same join on the same
-    HashPartitioning (pinned in tests/test_semantic_dedup.py: append
-    ×3 → compact keeps the pair set identical and the plan
-    Exchange-free, with the file count restored).
-
-    Partitioning subtlety (measured, not hypothetical): an explicit
-    `repartition(num_buckets, cluster)` over the table scan is ELIDED
-    by the optimizer (the catalog says the scan already carries that
-    HashPartitioning) while auto-bucketed-scan simultaneously falls
-    back to raw file splits because no downstream operator "needs" the
-    distribution — net effect, the rewrite would pass every small
-    file through 1:1 and compact nothing. Forcing the bucketed scan
-    (`autoBucketedScan.enabled=false` for the duration) makes the read
-    genuinely one-partition-per-bucket, so each write task owns one
-    bucket and emits exactly one file — no shuffle at all, the
-    cheapest possible compaction."""
-    from economic_data_etl_spark.operators.skew import write_bucketed
-
-    conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    saved = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "false")
-    try:
-        stage = f"{table_name}_compacting"
-        # Crash-window recovery (mirrors the trending sink's
-        # interrupted-swap path): the target rewrite below drops
-        # `table_name` before re-creating it from the stage, so a
-        # failure inside that rewrite leaves the ONLY copy in
-        # `<table>_compacting`. Detect that state on entry and restore
-        # the target from the stage — the stage already holds the full
-        # compacted layout, so finishing the interrupted swap IS the
-        # compaction (pinned in tests/test_semantic_dedup.py).
-        if spark.catalog.tableExists(stage) and not spark.catalog.tableExists(
-            table_name
-        ):
-            write_bucketed(
-                spark.table(stage), table_name, "cluster", num_buckets
-            )
-        else:
-            write_bucketed(
-                spark.table(table_name), stage, "cluster", num_buckets
-            )
-            write_bucketed(
-                spark.table(stage), table_name, "cluster", num_buckets
-            )
-        # split a db-qualified stage name before backticking — a
-        # single-identifier `db.tbl_compacting` would name-miss and
-        # leak the staging table (and its full data copy) every cycle
-        parts = [p.strip("`") for p in stage.split(".")]
-        qualified = ".".join(f"`{p}`" for p in parts)
-        spark.sql(f"DROP TABLE IF EXISTS {qualified}")
-    finally:
-        spark.conf.set(conf_key, saved)

@@ -4,8 +4,7 @@ Assign each event to a session: a new session starts when the gap since
 the previous event of the same key exceeds `gap`. Classic lag + running
 sum over a per-key window — one shuffle on the key, linear per partition.
 
-The streaming twin is `F.session_window` (streaming/windows.py); this
-batch form exists so results are SQL-checkable (same lag+cumsum is
+This form exists so results are SQL-checkable (same lag+cumsum is
 expressible in any ANSI engine) and usable in backfills.
 """
 

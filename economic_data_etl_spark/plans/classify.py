@@ -183,7 +183,7 @@ def nb_counts(train: DataFrame) -> DataFrame:
     """The NB sufficient statistics as a distributed (lang, wd, c)
     table — ONE map-side-combinable corpus shuffle. ADDITIVE across
     disjoint batches (like the LM gram counts), which is what the
-    streaming twin folds (streaming/incremental_nb.py)."""
+    incremental twin folds (streaming/incremental_nb.py)."""
     pos = train.select("lang", F.explode("w").alias("wd"))
     return pos.groupBy("lang", "wd").agg(
         F.count(F.lit(1)).cast("long").alias("c")
@@ -203,7 +203,7 @@ def model_from_counts(
 ):
     """Build the driver-side model (langs, priors, floors, lp) from a
     standing (lang, wd, c) count table plus per-class doc counts —
-    shared by the one-shot trainer and the streaming twin, so stream
+    shared by the one-shot trainer and the incremental twin, so fold
     == batch at the model level is true by construction.
 
     Everything operates on the vocab-bounded count table. Collects are
@@ -481,8 +481,7 @@ def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bucket, priors) and the held-out split classified. The oracle is "
     "the UNCHANGED one-shot replay: a green row proves fold == "
     "one-shot at the value level — continuous classifier retraining "
-    "with no gradient state. (Redelivery fence + staged-swap crash "
-    "safety pinned in tests/test_incremental_nb.py.)",
+    "with no gradient state.",
 )
 def ml_incremental_naive_bayes(
     spark: SparkSession, sf_dir: str

@@ -266,10 +266,7 @@ ORDER BY canonical
     "standing seen-set (canonicals below the split) — only never-seen "
     "canonicals are emitted, batch-local aliases collapse to their "
     "first occurrence. Per-batch cost O(batch): one groupBy + one "
-    "anti-join on the canonical key; the index never self-joins. The "
-    "streaming twin (streaming/crawl_frontier.py) is proven "
-    "stream == batch with crash-window convergence in "
-    "tests/test_crawl_frontier_stream.py.",
+    "anti-join on the canonical key; the index never self-joins.",
 )
 def crawl_incremental_frontier(
     spark: SparkSession, sf_dir: str

@@ -25,7 +25,8 @@ def _r(col):
 def _daily_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE daily pre-aggregation (one shuffle on (event_type, day) that
     collapses the raw stream to a days x types table) — one definition,
-    shared with the streaming index: operators/cusum.py:daily_totals."""
+    shared with the incremental Holt-Winters fold:
+    operators/cusum.py:daily_totals."""
     from economic_data_etl_spark.operators.cusum import daily_totals
 
     return daily_totals(load_table(spark, sf_dir, "events"))
@@ -1206,7 +1207,7 @@ def ts_forecast_backtest(
 @register(
     "ts_streaming_holt_winters",
     oracle=_hw_oracle(),
-    doc="STREAMING Holt-Winters — the true per-key fold state store "
+    doc="INCREMENTAL Holt-Winters — the true per-key fold state "
     "(streaming/incremental_holtwinters.py): the daily totals arrive "
     "in three day-ordered batches, each batch folds through the SAME "
     "hw_step Catalyst expression the one-shot fit uses, starting from "
@@ -1214,10 +1215,10 @@ def ts_forecast_backtest(
     "inside the two-week classical init window buffer raw values until "
     "the threshold, then init + fold the remainder. The oracle is the "
     "one-shot recursive-CTE replay over the FULL data, so a green row "
-    "proves stream == batch at the value level (the pytest twin pins "
-    "it bit-for-bit, plus redelivery-skip, out-of-order rejection, and "
-    "crash-at-every-offset staged-swap fuzz). State is key-sized: the "
-    "100 TB stream collapses to a handful of doubles per key.",
+    "proves fold == batch at the value level (the pytest twin pins "
+    "it bit-for-bit, plus warm-up and out-of-order rejection). State "
+    "is key-sized: the daily series collapses to a handful of doubles "
+    "per key.",
 )
 def ts_streaming_holt_winters(
     spark: SparkSession, sf_dir: str

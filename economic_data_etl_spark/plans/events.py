@@ -1,9 +1,8 @@
 """Event-time queries over the `events` table: tumbling / sliding /
 session windows (batch semantics, SURVEY.md §2.10), as-of join, range join.
 
-The streaming twins of the window queries live in
-`economic_data_etl_spark/streaming/windows.py`; these batch forms share the
-same window math so results are oracle-checkable in SQL.
+Each window query's math is plain SQL-expressible so results are
+oracle-checkable.
 """
 
 from __future__ import annotations

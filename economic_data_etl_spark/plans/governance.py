@@ -23,9 +23,7 @@ can BE a gram's retained first occurrence — the first moves to the
 earliest surviving occurrence and that doc's spans are recomputed)
 and the crawl-frontier seen-set (a canonical's first_doc moves to the
 earliest surviving page, or leaves the seen-set so a re-crawl
-re-fetches). The crawl frontier's streaming sink
-(streaming/crawl_frontier.py) erases crash-safely and is fuzzed at
-every kill offset in tests/test_erasure_indexes.py.
+re-fetches).
 
 Scale shape: the revoked set is doc-keyed; anti-join erasure is one
 (broadcastable) anti-join per index table. The reassignment lanes add
@@ -751,9 +749,8 @@ ORDER BY c.canonical
     "with that canonical, and canonicals with no surviving occurrence "
     "leave the seen-set entirely (a future re-crawl re-fetches them — "
     "the right-to-be-forgotten semantics). Served seen-set comes from "
-    "streaming/crawl_frontier.py:erase_frontier_index (the same "
-    "algebra the streaming twin's apply_erasure compacts); the oracle "
-    "is the from-scratch replay of the reduced stream (canonical → "
+    "streaming/crawl_frontier.py:erase_frontier_index; the oracle "
+    "is the from-scratch rebuild on the reduced corpus (canonical → "
     "min surviving doc_id). One canonicalize pass over the surviving "
     "pages semi-joined to the affected canonicals; unaffected rows are "
     "never touched.",

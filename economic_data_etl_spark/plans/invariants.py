@@ -73,10 +73,6 @@ _EXACT_PAIRS_CTE = r"""
 """
 
 
-def _one_row(spark: SparkSession, schema: str, row: tuple) -> DataFrame:
-    return spark.createDataFrame([row], schema)
-
-
 @register(
     "inv_minhash_lsh_recall",
     oracle=_EXACT_PAIRS_CTE
@@ -438,8 +434,7 @@ def inv_approx_distinct_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     "restricted to pairs touching the batch — zero missing, zero extra "
     "(incremental processing loses and invents nothing). The doc "
     "split counts are recomputed by DuckDB as the cross-engine value "
-    "check. Same certification shape the streaming semantic-dedup twin "
-    "uses.",
+    "check.",
 )
 def inv_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from economic_data_etl_spark.operators import dedup

@@ -395,14 +395,12 @@ _LMI_SPLIT2 = 300
     "table folded batch-by-batch equals the one-shot build exactly. "
     f"Three disjoint document batches (doc_id < {_LMI_SPLIT1}, "
     f"[{_LMI_SPLIT1}, {_LMI_SPLIT2}), >= {_LMI_SPLIT2}) fold through "
-    "the same union+sum merge the streaming sink applies, and the "
+    "the union+sum merge (fold_counts), and the "
     "merged table serves the full-corpus scoring pass "
     "(score_with_counts — prune, conditional ratios, backoff chain). "
     "The oracle is the UNCHANGED one-shot replay: a green row proves "
     "fold == one-shot at the value level, the additivity argument "
-    "made checkable. (Redelivery is fenced by the batch-id high-water "
-    "mark in the sink — counts are additive, NOT idempotent, so the "
-    "fence is load-bearing; pinned in tests/test_incremental_lm.py.)",
+    "made checkable.",
 )
 def text_incremental_perplexity(
     spark: SparkSession, sf_dir: str

@@ -112,8 +112,8 @@ def sketch_heavy_hitters_bigrams(
 
 
 # --------------------------------------------------------------------------
-# Mergeable Misra-Gries certificate (the streaming heavy-hitters sink's
-# math, driver-checkable).
+# Mergeable Misra-Gries certificate (streaming/heavyhitters.py:_mg_merge
+# folded batch by batch, driver-checkable).
 # --------------------------------------------------------------------------
 _MG_K = 30  # threshold n/30
 _MG_BATCHES = 4
@@ -135,8 +135,8 @@ _MG_BATCHES = 4
         WHERE c * {_MG_K} > n
         ORDER BY item
     """,
-    doc="Mergeable Misra-Gries certificate (the streaming "
-    "heavy-hitters sink's math — streaming/heavyhitters.py): a "
+    doc="Mergeable Misra-Gries certificate (the weighted MG merge — "
+    "streaming/heavyhitters.py:_mg_merge): a "
     "deterministic skewed item stream derived from event_id (12 heavy "
     "items h0..h22 at ~n/24 each, n/2 singletons — scale-free, so real "
     f"summary trims happen at every SF) is folded in {_MG_BATCHES} "
@@ -167,7 +167,7 @@ def inv_mg_mergeable_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # fold in batches (event_id % _MG_BATCHES) through the mergeable
     # summary — each collect is <= cap x partitions rows (k-bounded,
-    # never stream-bounded), mirroring the streaming sink exactly
+    # never stream-bounded)
     counters: dict[str, int] = {}
     n_total, err = 0, 0
     for b in range(_MG_BATCHES):

@@ -653,7 +653,7 @@ _ISAMPLE_OVERLAP = 250
     "MERGEABLE top-k reservoir. A standing reservoir is built from "
     f"docs below {_ISAMPLE_SPLIT}, a batch covering docs >= "
     f"{_ISAMPLE_OVERLAP} folds in through the same union + "
-    "dedupe-by-doc + trim merge the streaming sink applies (the "
+    "dedupe-by-doc + trim merge (the "
     "overlap is a simulated redelivery, a no-op because a re-seen doc "
     "carries the identical key), and the served sample is compared "
     "against the FULL-corpus one-shot A-Res oracle — a green row "

@@ -1,37 +1,28 @@
-"""Streaming Holt-Winters: a true per-key FOLD state store — (level,
-trend, M seasonals, position counter) plus a warm-up buffer — updated
-one micro-batch of finalized daily totals at a time, with forecasts
-served from the state at any point in the stream.
+"""Incremental Holt-Winters: a per-key FOLD state — (level, trend, M
+seasonals, position counter) plus a warm-up buffer — updated one batch
+of finalized daily totals at a time.
 
-The streaming twin of `operators/holtwinters.py`, completing the
-forecaster the way the CUSUM/KLL/CMS/KMV lanes were completed. The
-batch fit folds the per-key ordered daily array through `hw_step`;
-this sink folds the SAME step expression over each batch's new days,
-starting from the stored state — so stream == batch is bit-exact by
-construction (pinned in tests/test_incremental_holtwinters_stream.py),
-not merely up-to-rounding. Keys still inside the classical two-week
-initialization window buffer their raw values (at most 2*M doubles);
-the moment a key's buffer reaches 2*M the init runs and the remainder
-of the batch folds through.
+The incremental twin of `operators/holtwinters.py`. The batch fit folds
+the per-key ordered daily array through `hw_step`; `_fold_batch` folds
+the SAME step expression over each batch's new days, starting from the
+stored state — so the folded state forecasts bit-exactly what the
+one-shot fit does (pinned in tests/test_incremental_holtwinters_stream.py;
+served by plans/econometrics.py:ts_streaming_holt_winters). Keys still
+inside the classical two-week initialization window buffer their raw
+values (at most 2*M doubles); the moment a key's buffer reaches 2*M the
+init runs and the remainder of the batch folds through.
 
-Input contract (the standard watermarked-daily-aggregate shape): each
-micro-batch delivers FINALIZED (key, day, total) rows — every day
-complete in exactly one batch, days per key arriving in order (the
-upstream watermarked tumbling-day aggregation emits exactly this).
-A violation (a batch day at or before the key's folded last_day) is
-the caller's bug and raises rather than silently mis-folding.
+Input contract: each batch delivers FINALIZED (key, day, total) rows —
+every day complete in exactly one batch, days per key arriving in
+order. A violation (a batch day at or before the key's folded last_day)
+is the caller's bug and raises rather than silently mis-folding.
 
-State is key-sized (a handful of doubles per key — the index the 100 TB
-stream collapses to). Folds are not idempotent, so the state carries a
-batch-id mark and the handler is `streaming/util.py:exactly_once_fold`
-— crash recovery, redelivery skip and staged commit in one place.
-Fuzzed at every kill offset in
-tests/test_incremental_holtwinters_stream.py.
+State is key-sized: a handful of doubles per key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -45,14 +36,8 @@ from pyspark.sql.types import (
 
 from economic_data_etl_spark.operators.holtwinters import (
     M,
-    forecast_from_state,
     hw_fold,
     hw_init,
-)
-from economic_data_etl_spark.streaming.util import (
-    BatchMark,
-    exactly_once_fold,
-    read_data_rows,
 )
 
 STATE_SCHEMA = StructType(
@@ -60,7 +45,7 @@ STATE_SCHEMA = StructType(
         StructField("event_type", StringType(), True),
         # warm-up buffer (< 2*M values so far); NULL once fitted
         StructField("buf", ArrayType(DoubleType(), True), True),
-        StructField("n", LongType(), True),  # days folded (mark: batch id)
+        StructField("n", LongType(), True),  # days folded
         StructField("last_day", TimestampType(), True),
         StructField("level", DoubleType(), True),
         StructField("trend", DoubleType(), True),
@@ -68,39 +53,10 @@ STATE_SCHEMA = StructType(
     ]
 )
 
-_META = "\x00meta"
-MARK = BatchMark(
-    STATE_SCHEMA,
-    "event_type",
-    _META,
-    "n",
-    (_META, None, None, None, None, None, None),
-)
-
-
-def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The per-key state table without its mark row. NULL keys are
-    data."""
-    return read_data_rows(spark, state_dir, MARK)
-
-
-def forecast_now(
-    spark: SparkSession, state_dir: str, horizon: int = M
-) -> DataFrame:
-    """(key, h, forecast_day, yhat) served from the standing state —
-    identical to the one-shot batch forecast over everything folded so
-    far. Keys still warming up (no fit yet) are absent, exactly as the
-    batch operator drops keys with < 2*M days."""
-    fitted = read_state(spark, state_dir).filter(
-        F.col("level").isNotNull()
-    )
-    return forecast_from_state(fitted, horizon)
-
 
 def _fold_batch(state: DataFrame, batch_daily: DataFrame) -> DataFrame:
     """Pure-DataFrame fold of one batch of finalized daily totals into
-    the state table (no I/O — shared by the foreachBatch sink and the
-    in-memory catalog replay). Raises on an out-of-order day."""
+    the state table (no I/O). Raises on an out-of-order day."""
     b = (
         batch_daily.groupBy("event_type")
         .agg(
@@ -196,23 +152,3 @@ def _fold_batch(state: DataFrame, batch_daily: DataFrame) -> DataFrame:
         F.col("__trend").alias("trend"),
         F.col("__s").alias("s"),
     )
-
-
-def foreach_batch_incremental_holtwinters(
-    state_dir: str,
-    key_col: str = "event_type",
-    day_col: str = "day",
-    value_col: str = "total",
-):
-    """Build the foreachBatch function over finalized daily-total rows:
-    fold each key's new days through the recurrence."""
-
-    def fold(state: DataFrame, batch_df: DataFrame) -> DataFrame:
-        batch_daily = batch_df.select(
-            F.col(key_col).alias("event_type"),
-            F.col(day_col).alias("day"),
-            F.col(value_col).alias("total"),
-        )
-        return _fold_batch(state, batch_daily)
-
-    return exactly_once_fold(state_dir, MARK, fold)

@@ -1,63 +1,25 @@
-"""Streaming Stupid-Backoff LM index: the standing (order, gram, count)
-table folded per micro-batch.
+"""Incremental Stupid-Backoff LM index: the standing (order, gram,
+count) table folded one batch at a time.
 
 N-gram counts are ADDITIVE — the count table of a union of disjoint
-document batches is the sum of the per-batch tables — so the stream
-fold equals the one-shot build exactly at the value level, and serving
+document batches is the sum of the per-batch tables — so the fold
+equals the one-shot build exactly at the value level, and serving
 (plans/lmppl.py:score_with_counts — prune, conditional ratios, backoff
-scoring) is a pure function of the standing counts. The handler is
-`streaming/util.py:exactly_once_fold`: its batch-id mark makes
-redelivered micro-batches no-ops (counts are NOT idempotent per row —
-additivity cuts the other way — so the fence is load-bearing here,
-unlike the hash-dedup sinks where the math itself absorbs redelivery),
-and its staged commit leaves either the old or the new index after a
-crash at any offset, never a torn one.
+scoring) is a pure function of the standing counts
+(plans/lmppl.py:text_incremental_perplexity). Erasure is the same fold
+with negated counts (plans/governance.py:governance_erasure_lm).
 
 State is vocabulary-sized (all grams seen so far, orders 1-3), the
 same growth class as the standing BM25 postings
 (operators/retrieval.py); serving prunes to the top-K per
-order, so the broadcast stays config-bounded regardless of how long
-the stream has run.
+order, so the broadcast stays config-bounded regardless of how many
+batches have been folded.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-from economic_data_etl_spark.streaming.util import (
-    BatchMark,
-    exactly_once_fold,
-    read_data_rows,
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("ord", IntegerType(), True),
-        StructField("g", StringType(), True),
-        StructField("c", LongType(), True),
-    ]
-)
-
-_META_ORD = -1
-_META_G = "\x00meta"
-# batch-id mark row: (ord = -1, g = '\x00meta', c = batch id)
-MARK = BatchMark(
-    STATE_SCHEMA, "ord", _META_ORD, "c", (_META_ORD, _META_G, None)
-)
-
-
-def read_counts(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The standing (ord, g, c) count table — directly servable by
-    plans/lmppl.py:score_with_counts."""
-    return read_data_rows(spark, state_dir, MARK)
 
 
 def fold_counts(standing: DataFrame, batch_counts: DataFrame) -> DataFrame:
@@ -68,30 +30,6 @@ def fold_counts(standing: DataFrame, batch_counts: DataFrame) -> DataFrame:
         .groupBy("ord", "g")
         .agg(F.sum("c").alias("c"))
     )
-
-
-def foreach_batch_incremental_lm(state_dir: str):
-    """foreachBatch sink over a documents stream (doc_id, source,
-    text): count the micro-batch's grams and fold them into the
-    standing table."""
-
-    def fold(counts: DataFrame, batch_df: DataFrame) -> DataFrame:
-        from economic_data_etl_spark.plans.lmppl import (
-            _gram_counts,
-            _positions,
-            token_arrays,
-        )
-
-        batch_counts = _gram_counts(
-            _positions(token_arrays(batch_df))
-        ).withColumn("c", F.col("c").cast("long"))
-        return fold_counts(counts, batch_counts).select(
-            F.col("ord").cast("int").alias("ord"),
-            "g",
-            F.col("c").cast("long").alias("c"),
-        )
-
-    return exactly_once_fold(state_dir, MARK, fold)
 
 
 def erase_counts(

@@ -1,13 +1,11 @@
-"""Crash-offset selection for the streaming crash-recovery fuzz tests.
+"""Crash-offset selection for the warehouse commit's crash-recovery
+tests.
 
-The exhaustive kill-at-every-offset sweeps dominated the default test
-suite (~8 minutes across eleven files) while exercising the same
-recovery BRANCHES many times: what distinguishes offsets is their
-class — crash before any commit, between staging and commit, mid
-stream, at the final commit — not their exact index. The default tier
-therefore kills at the first two, one middle, and the last two offsets
-(every class), and the exhaustive sweep stays one env var away for
-release verification:
+What distinguishes kill offsets is their class — crash before any
+commit, between staging and commit, at the final commit — not their
+exact index. The default tier therefore kills at the first two, one
+middle, and the last two offsets (every class), and the exhaustive
+sweep stays one env var away for release verification:
 
     SPARK_GRAFT_EXHAUSTIVE_CRASH=1 python -m pytest tests/ -k crash
 
@@ -25,7 +23,7 @@ from contextlib import contextmanager
 
 
 def crash_offsets(n: int) -> list[int]:
-    """Kill points to exercise for a stream with `n` crash slots."""
+    """Kill points to exercise for a sequence of `n` crash slots."""
     if os.environ.get("SPARK_GRAFT_EXHAUSTIVE_CRASH"):
         return list(range(n))
     pts = {0, 1, n // 2, n - 2, n - 1}

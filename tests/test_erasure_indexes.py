@@ -1,26 +1,13 @@
 """Erasure propagation through the standing indexes (substring gram
-firsts, crawl frontier seen-set): the batch erasure
-algebra and the served frontier must equal a FROM-SCRATCH rebuild on the
-reduced corpus, at every crash offset of the frontier's erasure sequence;
-a full replay must be idempotent, and the sharp reassignment cases must
-actually fire (a revoked retained-first gram/canonical moving to its
-earliest survivor).
+firsts, crawl frontier seen-set): the batch erasure algebra must equal
+a FROM-SCRATCH rebuild on the reduced corpus, and the sharp
+reassignment cases must actually fire (a revoked retained-first
+gram/canonical moving to its earliest survivor).
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import functions as F
-
-
-def _staged_swap(df, path: str) -> None:
-    staging = f"{path}.staging"
-    df.write.mode("overwrite").parquet(staging)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(staging, path)
 
 
 def _rows(df) -> set:
@@ -95,21 +82,24 @@ class TestSubstringErasure:
 # =====================================================================
 # Crawl-frontier seen-set
 # =====================================================================
+# 12 canonicals, each seen twice: doc i and doc i + 12 share one
 URL_ROWS = [
     (i, f"HTTP://WWW.Site{i % 3}.COM:80//p//{i % 4}/?utm_s=x&b=2&a=1#f")
-    for i in range(12)
+    for i in range(24)
 ]
 
 
 class TestFrontierErasure:
-    def _truth(self, spark, revoked_ids):
+    def _index(self, spark, revoked_ids):
+        """The (canonical, first_doc) seen-set a from-scratch build over
+        the docs not in `revoked_ids` gives."""
         from economic_data_etl_spark.operators.urls import canonical_url
 
         df = spark.createDataFrame(
             [r for r in URL_ROWS if r[0] not in revoked_ids],
             "doc_id long, url string",
         )
-        return _rows(
+        return (
             df.select(
                 canonical_url(F.col("url")).alias("canonical"), "doc_id"
             )
@@ -117,36 +107,14 @@ class TestFrontierErasure:
             .agg(F.min("doc_id").alias("first_doc"))
         )
 
-    def _build(self, spark, tmp_path, tag):
+    def test_erasure_reassigns_firsts(self, spark):
         from economic_data_etl_spark.streaming.crawl_frontier import (
-            foreach_batch_crawl_frontier,
-        )
-
-        idx = str(tmp_path / f"{tag}_idx")
-        fr = str(tmp_path / f"{tag}_fr")
-        tb = str(tmp_path / f"{tag}_tb")
-        patch = str(tmp_path / f"{tag}_patch")
-        df = spark.createDataFrame(URL_ROWS, "doc_id long, url string")
-        handle = foreach_batch_crawl_frontier(idx, fr)
-        handle(df.filter(F.col("doc_id") < 6), 0)
-        handle(df.filter(F.col("doc_id") >= 6), 1)
-        return idx, fr, tb, patch
-
-    def test_erasure_reassigns_firsts_and_fuzz(self, spark, tmp_path):
-        from economic_data_etl_spark.streaming.crawl_frontier import (
-            INDEX_SCHEMA,
-            apply_erasure,
+            erase_frontier_index,
             frontier_erasure_patch,
-            read_frontier_erased,
-        )
-        from economic_data_etl_spark.operators.io import (
-            read_parquet_or_empty,
         )
 
-        revoked_ids = {0, 1, 2}  # every canonical's original first
-        want = self._truth(spark, revoked_ids)
-        # reassignment fires: firsts move to later surviving docs
-        assert want and all(fd not in revoked_ids for _, fd in want)
+        revoked_ids = {0, 1, 2}
+        want = _rows(self._index(spark, revoked_ids))
         revoked = spark.createDataFrame(
             [(i,) for i in sorted(revoked_ids)], "doc_id long"
         )
@@ -155,63 +123,17 @@ class TestFrontierErasure:
             "doc_id long, url string",
         )
 
-        idx, fr, tb, patch = self._build(spark, tmp_path, "full")
-        before = _rows(read_frontier_erased(spark, idx, tb, patch))
-        assert before != want
-        apply_erasure(
-            spark, idx, fr, tb, patch, revoked, surviving
-        )
-        for path in (idx, fr):
-            assert (
-                _rows(read_frontier_erased(spark, path, tb, patch))
-                == want
-            )
-        apply_erasure(  # replay no-op
-            spark, idx, fr, tb, patch, revoked, surviving
-        )
-        assert _rows(read_frontier_erased(spark, idx, tb, patch)) == want
-        assert not os.path.exists(tb) and not os.path.exists(patch)
+        def seen(df):
+            return _rows(df.select("canonical", "first_doc"))
 
-        for kill_at in range(1, 6):
-            idx, fr, tb, patch = self._build(
-                spark, tmp_path, f"k{kill_at}"
-            )
-
-            def write_patch():
-                index = read_parquet_or_empty(
-                    spark, idx, INDEX_SCHEMA
-                ).dropDuplicates(["canonical"])
-                frontier_erasure_patch(
-                    index, revoked, surviving
-                ).write.mode("overwrite").parquet(patch)
-
-            def compact(path):
-                _staged_swap(
-                    read_frontier_erased(spark, path, tb, patch), path
-                )
-
-            steps = [
-                write_patch,
-                lambda: revoked.select(
-                    F.col("doc_id").alias("first_doc")
-                ).write.mode("append").parquet(tb),
-                lambda: compact(idx),
-                lambda: compact(fr),
-                lambda: shutil.rmtree(patch),
-            ]
-            for s in steps[:kill_at]:
-                s()
-            served = _rows(read_frontier_erased(spark, idx, tb, patch))
-            if kill_at == 1:
-                assert served == before, f"kill_at={kill_at}"
-            else:
-                assert served == want, f"kill_at={kill_at}"
-            apply_erasure(
-                spark, idx, fr, tb, patch, revoked, surviving
-            )
-            for path in (idx, fr):
-                assert (
-                    _rows(read_frontier_erased(spark, path, tb, patch))
-                    == want
-                ), f"post-replay kill_at={kill_at}"
-            assert not os.path.exists(tb)
+        index = self._index(spark, set())
+        assert seen(index) != want
+        # the revoked firsts move to their canonical's surviving twin
+        affected = {c for c, fd in seen(index) if fd in revoked_ids}
+        moved = {(c, fd) for c, fd in want if c in affected}
+        assert {fd for _, fd in moved} == {12, 13, 14}
+        assert seen(frontier_erasure_patch(index, revoked, surviving)) == moved
+        erased = erase_frontier_index(index, revoked, surviving)
+        assert seen(erased) == want
+        # erasing again changes nothing: no first is revoked any more
+        assert seen(erase_frontier_index(erased, revoked, surviving)) == want

@@ -1,26 +1,17 @@
-"""Streaming Misra-Gries heavy hitters: the maintained state's bounds
-must sandwich the true counts (presence guaranteed for every true
-hitter), redelivered batches must fold exactly once, and a crash at
-ANY offset of the staged-swap sequence must converge to the no-crash
-state after replay."""
+"""Mergeable Misra-Gries: a summary folded batch by batch through
+per-partition `mg_summaries` and the weighted `_mg_merge` must
+sandwich the true counts, with presence guaranteed for every true
+hitter (the fold of plans/sketches.py:inv_mg_mergeable_bounds)."""
 
 from __future__ import annotations
 
-from tests.crash_points import crash_offsets
-
 from collections import Counter
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from economic_data_etl_spark.streaming.heavyhitters import (
-    STATE_SCHEMA,
-    _mg_merge,
-    _read_state,
-    foreach_batch_heavy_hitters,
-    heavy_hitter_report,
-)
+from economic_data_etl_spark.operators.heavyhitters import mg_summaries
+from economic_data_etl_spark.streaming.heavyhitters import _mg_merge
 
 
 def _df(spark, items, parts=3):
@@ -29,52 +20,61 @@ def _df(spark, items, parts=3):
     ).repartition(parts)
 
 
-def _fold(spark, state_dir, batches, k):
-    handle = foreach_batch_heavy_hitters(state_dir, "item", k)
-    for bi, b in enumerate(batches):
-        handle(_df(spark, b), bi)
+def _fold(spark, batches, k):
+    """(counters, n_total, err) after folding every batch at internal
+    capacity 2k+1: the partition layer and the merge layer each
+    undercount by <= n/(cap+1), so err <= n/(k+1) < n/k."""
+    cap = 2 * k + 1
+    counters: dict[str, int] = {}
+    n_total, err = 0, 0
+    for items in batches:
+        bc: dict[str, int] = {}
+        bn = 0
+        for r in mg_summaries(_df(spark, items), "item", cap).collect():
+            if r.is_count:
+                bn += r.weight
+            else:
+                bc[r.item] = bc.get(r.item, 0) + r.weight
+        counters, m = _mg_merge(counters, bc, cap)
+        err += m + bn // (cap + 1)
+        n_total += bn
+    return counters, n_total, err
 
 
-def _check_guarantees(spark, state_dir, all_items, k):
-    """The three promises of the module docstring, against brute force."""
-    cnt = Counter(t for t in all_items if t is not None)
+def _check_guarantees(spark, batches, k):
+    """The bounds of the mergeable summary, against brute force.
+    Returns the reported candidates: item -> guaranteed."""
+    counters, n_total, err = _fold(spark, batches, k)
+    cnt = Counter(t for b in batches for t in b if t is not None)
     n = sum(cnt.values())
-    rep = {
-        r.item: r for r in heavy_hitter_report(spark, state_dir, k).collect()
-    }
-    counters, n_total, err, _ = _read_state(spark, state_dir)
     assert n_total == n
     assert err * (k + 1) <= n  # err <= n/(k+1)
-    # presence: every true hitter is in the report
+    # candidates: items whose upper bound can still reach n/k
+    rep = {t: w for t, w in counters.items() if (w + err) * k > n}
+    # presence: every true hitter is a candidate
     for t, c in cnt.items():
         if c * k > n:
             assert t in rep, f"true hitter {t} missing"
-    # sandwich: lower <= true <= upper for every reported item
-    for t, r in rep.items():
-        assert r.weight_lower <= cnt[t] <= r.weight_upper, t
-    # guaranteed implies true hitter
-    for t, r in rep.items():
-        if r.guaranteed:
+    # sandwich: lower <= true <= upper for every candidate
+    for t, w in rep.items():
+        assert w <= cnt[t] <= w + err, t
+    # guaranteed (the lower bound clears n/k) implies true hitter
+    for t, w in rep.items():
+        if w * k > n:
             assert cnt[t] * k > n, f"false guarantee on {t}"
+    return {t: w * k > n for t, w in rep.items()}
 
 
-def test_stream_bounds_and_presence(spark, tmp_path):
-    state_dir = str(tmp_path / "hh_state")
+def test_stream_bounds_and_presence(spark):
     batches = [
         ["hot"] * 40 + [f"c{i}" for i in range(30)],
         ["hot"] * 30 + ["warm"] * 25 + [f"d{i}" for i in range(20)],
         ["warm"] * 35 + [f"e{i}" for i in range(25)] + [None] * 10,
     ]
-    _fold(spark, state_dir, batches, k=4)
-    all_items = [t for b in batches for t in b]
-    _check_guarantees(spark, state_dir, all_items, 4)
-    rep = {
-        r.item: r
-        for r in heavy_hitter_report(spark, state_dir, 4).collect()
-    }
+    guaranteed = _check_guarantees(spark, batches, 4)
     # with this data the two heavy items must be GUARANTEED, not just
     # possible: they dominate their batches
-    assert rep["hot"].guaranteed and rep["warm"].guaranteed
+    assert guaranteed["hot"] and guaranteed["warm"]
 
 
 @settings(
@@ -99,114 +99,6 @@ def test_stream_bounds_and_presence(spark, tmp_path):
     ),
     k=st.integers(min_value=2, max_value=6),
 )
-def test_property_bounds_hold(spark, tmp_path, batches, k):
-    import uuid
-
-    state_dir = str(tmp_path / f"hh_{uuid.uuid4().hex}")
+def test_property_bounds_hold(spark, batches, k):
     nonempty = [b for b in batches if b] or [["h1"]]
-    _fold(spark, state_dir, nonempty, k)
-    _check_guarantees(
-        spark, state_dir, [t for b in nonempty for t in b], k
-    )
-
-
-def test_redelivered_batch_folds_once(spark, tmp_path):
-    state_dir = str(tmp_path / "hh")
-    handle = foreach_batch_heavy_hitters(state_dir, "item", 3)
-    batch = _df(spark, ["a"] * 10 + ["b"] * 5)
-    handle(batch, 0)
-    s1 = sorted(map(tuple, _read_state(spark, state_dir)[0].items()))
-    n1 = _read_state(spark, state_dir)[1]
-    handle(batch, 0)  # redelivery
-    s2 = sorted(map(tuple, _read_state(spark, state_dir)[0].items()))
-    n2 = _read_state(spark, state_dir)[1]
-    assert s2 == s1 and n2 == n1 == 15
-
-
-def _run_with_kill(spark, state_dir, batches, k, kill_at):
-    """Step-driven twin of the handler (3 steps per batch: staging
-    write, rmtree state, rename), killed after `kill_at` steps, then
-    recovered by redelivering the interrupted batch through the REAL
-    handler and finishing the rest."""
-    import os
-    import shutil
-
-    from economic_data_etl_spark.operators.heavyhitters import (
-        mg_summaries,
-    )
-
-    cap = 2 * k + 1
-    handle = foreach_batch_heavy_hitters(state_dir, "item", k)
-    staging = f"{state_dir}.staging"
-    step = 0
-    killed = False
-    for bi, items in enumerate(batches):
-        batch = _df(spark, items)
-        if killed:
-            handle(batch, bi)
-            continue
-        if os.path.exists(staging) and not os.path.exists(state_dir):
-            os.rename(staging, state_dir)
-        counters, n_total, err, last_bid = _read_state(spark, state_dir)
-        assert bi > last_bid
-        summ = mg_summaries(batch, "item", cap).collect()
-        bc: dict[str, int] = {}
-        bn = 0
-        for r in summ:
-            if r.is_count:
-                bn += r.weight
-            else:
-                bc[r.item] = bc.get(r.item, 0) + r.weight
-        merged, m = _mg_merge(counters, bc, cap)
-        err = err + m + bn // (cap + 1)
-        n_total += bn
-        rows = [
-            (t, w, False, None, None, None) for t, w in merged.items()
-        ] + [(None, None, True, n_total, err, bi)]
-        steps = [
-            lambda: spark.createDataFrame(rows, STATE_SCHEMA)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(staging),
-            lambda: shutil.rmtree(state_dir)
-            if os.path.exists(state_dir)
-            else None,
-            lambda: os.rename(staging, state_dir),
-        ]
-        for fn in steps:
-            if step == kill_at:
-                killed = True
-                break
-            fn()
-            step += 1
-        if killed:
-            handle(batch, bi)  # recovery: redeliver through the handler
-
-
-def test_crash_at_every_offset_converges(spark, tmp_path):
-    k = 3
-    batches = [
-        ["a"] * 12 + ["b"] * 3 + ["x", "y", "z"],
-        ["b"] * 9 + ["a"] * 2 + ["p", "q"],
-        ["c"] * 7 + ["a"] * 3 + ["r"],
-    ]
-    clean = str(tmp_path / "clean")
-    _fold(spark, clean, batches, k)
-    want_state = _read_state(spark, clean)
-    want = sorted(
-        map(tuple, heavy_hitter_report(spark, clean, k).collect())
-    )
-    assert want  # non-trivial
-
-    for kill_at in crash_offsets(3 * len(batches)):
-        state_dir = str(tmp_path / f"kill{kill_at}")
-        _run_with_kill(spark, state_dir, batches, k, kill_at)
-        got_state = _read_state(spark, state_dir)
-        assert got_state == want_state, f"kill_at={kill_at}"
-        got = sorted(
-            map(tuple, heavy_hitter_report(spark, state_dir, k).collect())
-        )
-        assert got == want, f"kill_at={kill_at}"
-        _check_guarantees(
-            spark, state_dir, [t for b in batches for t in b], k
-        )
+    _check_guarantees(spark, nonempty, k)

@@ -1,111 +1,35 @@
-"""Streaming weighted reservoir: the stream-folded top-k sample must
-equal the one-shot batch sample in any batch split (mergeable top-k of
-deterministic A-Res keys), redelivery must be a no-op, and a crash at
-any offset of the staged swap must converge after replay."""
+"""Incremental weighted reservoir: folding `rank_keyed` batches into a
+top-k reservoir must equal the one-shot batch sample in any batch
+split (mergeable top-k of deterministic A-Res keys)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from economic_data_etl_spark.sources.tables import load_table
-from economic_data_etl_spark.streaming.incremental_sample import (
-    foreach_batch_incremental_sample,
-    rank_keyed,
-    sample_now,
-)
+from economic_data_etl_spark.streaming.incremental_sample import rank_keyed
 
 K = 25
 N_BATCHES = 4
 
 
-def _batches(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return [
-        docs.filter(F.col("doc_id") % N_BATCHES == b)
-        for b in range(N_BATCHES)
-    ]
-
-
-def _want(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
+def _rows(df):
     return [
         (r.doc_id, r.source, r.weight, round(r.rk, 9))
-        for r in rank_keyed(docs)
-        .orderBy(F.desc("rk"), "doc_id")
-        .limit(K)
-        .collect()
+        for r in df.orderBy(F.desc("rk"), "doc_id").limit(K).collect()
     ]
 
 
-def _got(spark, state_dir):
-    return [
-        (r.doc_id, r.source, r.weight, round(r.rk, 9))
-        for r in sample_now(spark, state_dir).collect()
-    ]
-
-
-def test_stream_equals_batch(spark, sf_dir, tmp_path):
-    state = str(tmp_path / "res")
-    handle = foreach_batch_incremental_sample(state, K)
-    for bi, b in enumerate(_batches(spark, sf_dir)):
-        handle(b, bi)
-    assert _got(spark, state) == _want(spark, sf_dir)
-
-
-def test_redelivery_and_overlap_are_noops(spark, sf_dir, tmp_path):
-    state = str(tmp_path / "res")
-    handle = foreach_batch_incremental_sample(state, K)
-    batches = _batches(spark, sf_dir)
-    for bi, b in enumerate(batches):
-        handle(b, bi)
-    snap = _got(spark, state)
-    # exact redelivery (same batch id): skipped by the high-water mark
-    handle(batches[-1], len(batches) - 1)
-    assert _got(spark, state) == snap
-    # overlapping content under a NEW batch id: identical keys, no-op
-    # by the math
-    handle(batches[0], len(batches))
-    assert _got(spark, state) == snap
-
-
-def test_crash_recovery_at_every_batch(spark, sf_dir, tmp_path):
-    """Two crash shapes before each batch's fold: (a) a PARTIAL staging
-    dir (no _SUCCESS — a death mid-write) must be discarded, never
-    promoted; (b) a COMPLETE staging with state_dir missing (a death
-    between rmtree and rename) must be promoted. Either way the stream
-    converges to the batch sample."""
-    import os
-    import shutil
-
-    batches = _batches(spark, sf_dir)
-    want = _want(spark, sf_dir)
-
-    for kill_at in range(N_BATCHES):
-        # (a) partial staging planted before batch `kill_at`
-        state = str(tmp_path / f"p{kill_at}")
-        staging = f"{state}.staging"
-        h = foreach_batch_incremental_sample(state, K)
-        for bi, batch in enumerate(batches):
-            if bi == kill_at:
-                os.makedirs(staging, exist_ok=True)
-                with open(
-                    os.path.join(staging, "part-0.parquet"), "wb"
-                ) as f:
-                    f.write(b"garbage from a mid-write crash")
-            h(batch, bi)
-        assert _got(spark, state) == want, f"partial kill_at={kill_at}"
-        assert not os.path.exists(staging)
-
-    for kill_at in range(1, N_BATCHES):
-        # (b) complete staging, state dir gone (post-write crash)
-        state = str(tmp_path / f"c{kill_at}")
-        staging = f"{state}.staging"
-        h = foreach_batch_incremental_sample(state, K)
-        for bi, batch in enumerate(batches):
-            if bi == kill_at:
-                # simulate: previous fold's swap died between rmtree
-                # and rename — the only full copy lives in staging
-                shutil.move(state, staging)
-            h(batch, bi)
-        assert _got(spark, state) == want, f"complete kill_at={kill_at}"
-        assert not os.path.exists(staging)
+def test_stream_equals_batch(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents")
+    reservoir = None
+    for b in range(N_BATCHES):
+        keyed = rank_keyed(docs.filter(F.col("doc_id") % N_BATCHES == b))
+        merged = keyed if reservoir is None else reservoir.unionByName(keyed)
+        reservoir = (
+            merged.dropDuplicates(["doc_id"])
+            .orderBy(F.desc("rk"), "doc_id")
+            .limit(K)
+            .localCheckpoint()
+        )
+    assert _rows(reservoir) == _rows(rank_keyed(docs))

@@ -355,68 +355,6 @@ class TestSemanticDedup:
         assert bucketed == memory
         assert bucketed, "fixture must produce pairs"
 
-    def test_bucketed_layout_incremental_append(self, spark, sf_dir):
-        """The maintenance path: append an ingest batch's assignment to
-        the EXISTING bucketed layout (same bucket spec, frozen
-        centroids) — pairs over the appended table must equal the
-        in-memory operator over the full corpus, and the self-join must
-        STAY Exchange-free (the appended files are bucketed too, so the
-        scan keeps its HashPartitioning guarantee)."""
-        import contextlib
-        import io
-
-        from economic_data_etl_spark.operators.semantic import (
-            append_assignment_bucketed,
-            semantic_near_dup_pairs_from_bucketed,
-            write_assignment_bucketed,
-        )
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        base = emb.filter(F.col("vec_id") < 300)
-        batch = emb.filter(F.col("vec_id") >= 300)
-        cents = seed_centroids(emb, 8)  # frozen, shared by both writes
-        tbl = "t_sem_bucketed_append"
-        write_assignment_bucketed(
-            base, cents, tbl, probes=3, num_buckets=8
-        )
-        append_assignment_bucketed(
-            batch, cents, tbl, probes=3, num_buckets=8
-        )
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in semantic_near_dup_pairs_from_bucketed(
-                spark, tbl, threshold=TAU
-            ).collect()
-        }
-        want = {
-            (r["id_a"], r["id_b"])
-            for r in semantic_near_dup_pairs(
-                emb, cents, TAU, probes=3
-            ).collect()
-        }
-        assert got == want
-        assert any(a < 300 <= b for a, b in got), (
-            "fixture must produce at least one cross-increment pair"
-        )
-        saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            t = spark.table(tbl)
-            j = t.select("cluster", F.col("__id").alias("id_a")).join(
-                t.select("cluster", F.col("__id").alias("id_b")),
-                "cluster",
-            )
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                j.explain("formatted")
-            plan = buf.getvalue()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, plan
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", saved
-            )
-
     def test_bucketed_layout_array_fallback_above_dim_threshold(
         self, spark
     ):
@@ -463,94 +401,6 @@ class TestSemanticDedup:
         assert got == want
         assert got, "fixture must produce pairs"
 
-    def test_bucketed_layout_append_compact_cycle(self, spark, sf_dir):
-        """The FULL maintenance cycle the layout's economics rely on:
-        build → append ×3 (small files accrete, num_buckets per append)
-        → compact back to ONE file per bucket. The pair set must equal
-        the full in-memory recompute at every step, and the self-join
-        must stay Exchange-free both while fragmented and after the
-        compaction rewrite — compaction bounds small-file overhead
-        without ever touching the answer or the plan shape."""
-        import contextlib
-        import io
-
-        from economic_data_etl_spark.operators.semantic import (
-            append_assignment_bucketed,
-            compact_assignment_bucketed,
-            semantic_near_dup_pairs_from_bucketed,
-            write_assignment_bucketed,
-        )
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        cents = seed_centroids(emb, 8)  # frozen across the whole cycle
-        tbl = "t_sem_bucketed_cycle"
-        nb = 8
-        cuts = [150, 250, 350]
-        write_assignment_bucketed(
-            emb.filter(F.col("vec_id") < cuts[0]),
-            cents, tbl, probes=3, num_buckets=nb,
-        )
-        for lo, hi in zip(cuts, cuts[1:] + [None]):
-            cond = F.col("vec_id") >= lo
-            if hi is not None:
-                cond = cond & (F.col("vec_id") < hi)
-            append_assignment_bucketed(
-                emb.filter(cond), cents, tbl, probes=3, num_buckets=nb
-            )
-
-        want = {
-            (r["id_a"], r["id_b"])
-            for r in semantic_near_dup_pairs(
-                emb, cents, TAU, probes=3
-            ).collect()
-        }
-
-        def pairs():
-            return {
-                (r["id_a"], r["id_b"])
-                for r in semantic_near_dup_pairs_from_bucketed(
-                    spark, tbl, threshold=TAU
-                ).collect()
-            }
-
-        def plan_no_exchange():
-            saved = spark.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold"
-            )
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            try:
-                buf = io.StringIO()
-                with contextlib.redirect_stdout(buf):
-                    semantic_near_dup_pairs_from_bucketed(
-                        spark, tbl, threshold=TAU
-                    ).explain("formatted")
-                plan = buf.getvalue()
-                assert "Exchange" not in plan, plan
-            finally:
-                spark.conf.set(
-                    "spark.sql.autoBroadcastJoinThreshold", saved
-                )
-
-        # fragmented: base + 3 appends → up to 4×nb files, still
-        # correct and still Exchange-free
-        n_files_fragmented = len(spark.table(tbl).inputFiles())
-        assert n_files_fragmented > nb, "appends must accrete files"
-        assert pairs() == want
-        plan_no_exchange()
-
-        compact_assignment_bucketed(spark, tbl, num_buckets=nb)
-        n_after = len(spark.table(tbl).inputFiles())
-        assert n_after <= nb < n_files_fragmented, (
-            f"compaction must restore at most one file per bucket "
-            f"(got {n_after} files for {nb} buckets, "
-            f"was {n_files_fragmented} fragmented)"
-        )
-        assert pairs() == want
-        plan_no_exchange()
-        assert any(a < cuts[0] <= b for a, b in want), (
-            "fixture must produce at least one cross-increment pair"
-        )
-
     def test_vectorized_scoring_matches_expression(self, spark, sf_dir):
         """The einsum pair-scoring lane must produce the SAME pair set
         as the expression dot-product fold (same candidates, same
@@ -571,232 +421,3 @@ class TestSemanticDedup:
         }
         assert expr == vec
         assert expr, "fixture must produce pairs"
-
-    def test_compaction_interrupted_swap_recovers(self, spark, sf_dir):
-        """ADVICE r6 (semantic.py:855): compaction's target rewrite
-        drops `table_name` before re-creating it from the stage — a
-        crash in that window used to leave the ONLY copy in
-        `<table>_compacting` with no recovery path. Simulate the
-        crash state exactly (stage fully written, target dropped) and
-        assert the next compact_assignment_bucketed call restores the
-        target with the identical pair set and a compacted layout —
-        mirroring the trending sink's interrupted-swap recovery."""
-        from economic_data_etl_spark.operators.semantic import (
-            compact_assignment_bucketed,
-            semantic_near_dup_pairs_from_bucketed,
-            write_assignment_bucketed,
-        )
-        from economic_data_etl_spark.operators.skew import write_bucketed
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        cents = seed_centroids(emb, 8)
-        tbl = "t_sem_bucketed_crash"
-        nb = 8
-        write_assignment_bucketed(emb, cents, tbl, probes=2, num_buckets=nb)
-        want = {
-            (r["id_a"], r["id_b"])
-            for r in semantic_near_dup_pairs_from_bucketed(
-                spark, tbl, threshold=TAU
-            ).collect()
-        }
-        assert want, "fixture must produce pairs"
-
-        # reproduce the crash window: stage written, target dropped
-        # (write_bucketed's own first step), process "dies" before the
-        # target is re-created
-        conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        saved = spark.conf.get(conf_key)
-        spark.conf.set(conf_key, "false")
-        try:
-            write_bucketed(
-                spark.table(tbl), f"{tbl}_compacting", "cluster", nb
-            )
-        finally:
-            spark.conf.set(conf_key, saved)
-        spark.sql(f"DROP TABLE `{tbl}`")
-        assert not spark.catalog.tableExists(tbl)
-
-        compact_assignment_bucketed(spark, tbl, num_buckets=nb)
-        assert spark.catalog.tableExists(tbl)
-        assert not spark.catalog.tableExists(f"{tbl}_compacting")
-        assert len(spark.table(tbl).inputFiles()) <= nb
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in semantic_near_dup_pairs_from_bucketed(
-                spark, tbl, threshold=TAU
-            ).collect()
-        }
-        assert got == want
-
-
-def test_compaction_crash_at_any_offset_recovers(spark, sf_dir):
-    """Property over the WHOLE compaction crash window (round-7 advice:
-    mirror the trending sink's test_crash_at_any_offset_recovers). The
-    compaction sequence is write(table->stage) -> write(stage->target,
-    which internally DROPS the target first) -> DROP stage. A crash
-    after ANY of those steps — including mid-rewrite of the target,
-    which leaves the table dropped and an orphaned partial directory —
-    followed by a retry of compact_assignment_bucketed, must converge
-    to the compacted layout with the identical pair set. The single
-    offset pinned by test_compaction_interrupted_swap_recovers is
-    'mid_write2' here; this covers every other offset, with appends
-    interleaved between cycles so recovery is tested against a
-    GROWING table, not just the build."""
-    import itertools
-    import os
-    import shutil
-    from urllib.parse import urlparse
-
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from economic_data_etl_spark.operators import skew
-    from economic_data_etl_spark.operators.semantic import (
-        append_assignment_bucketed,
-        compact_assignment_bucketed,
-        semantic_near_dup_pairs_from_bucketed,
-        write_assignment_bucketed,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = seed_centroids(emb, 8)
-    nb = 8
-    counter = itertools.count()
-
-    class Killed(RuntimeError):
-        pass
-
-    def table_dir(tbl: str) -> str:
-        db = spark.catalog.currentDatabase()
-        for r in spark.sql(f"DESCRIBE DATABASE `{db}`").collect():
-            if r[0].strip().lower().startswith("location"):
-                loc = r[1]
-                return os.path.join(
-                    urlparse(loc).path or loc, tbl.lower()
-                )
-        raise AssertionError("no database location")
-
-    real_write = skew.write_bucketed
-
-    @settings(
-        max_examples=3,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    @given(data=st.data())
-    def run(data):
-        tbl = f"t_sem_crash_fuzz_{next(counter)}"
-        cuts = [0, 150, 300, 500]
-        write_assignment_bucketed(
-            emb.filter(F.col("vec_id") < cuts[1]),
-            cents, tbl, probes=3, num_buckets=nb,
-        )
-        n_rounds = data.draw(st.integers(1, 2))
-        hi = cuts[1]
-        for rnd in range(n_rounds):
-            lo, hi = cuts[rnd + 1], cuts[rnd + 2]
-            append_assignment_bucketed(
-                emb.filter(
-                    (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-                ),
-                cents, tbl, probes=3, num_buckets=nb,
-            )
-            crash = data.draw(
-                st.sampled_from(
-                    [
-                        "none",
-                        "before_write1",
-                        "before_write2",
-                        "mid_write2",
-                        "before_stage_drop",
-                    ]
-                )
-            )
-            calls = {"n": 0}
-
-            def hooked_write(df, table_name, bucket_col, num_buckets=16,
-                             sort_col=None, _crash=crash, _calls=calls):
-                if _crash == "before_write1" and _calls["n"] == 0:
-                    raise Killed()
-                if _crash in ("before_write2", "mid_write2") and (
-                    _calls["n"] == 1
-                ):
-                    if _crash == "mid_write2":
-                        # reproduce a die mid-saveAsTable: target
-                        # dropped, partial orphan directory on disk
-                        parts = [
-                            p.strip("`")
-                            for p in table_name.split(".")
-                        ]
-                        spark.sql(
-                            f"DROP TABLE IF EXISTS `{parts[-1]}`"
-                        )
-                        d = table_dir(parts[-1])
-                        os.makedirs(d, exist_ok=True)
-                        with open(
-                            os.path.join(d, "part-junk.parquet"), "wb"
-                        ) as f:
-                            f.write(b"not parquet")
-                    raise Killed()
-                real_write(
-                    df, table_name, bucket_col, num_buckets, sort_col
-                )
-                _calls["n"] += 1
-
-            real_sql = spark.sql
-
-            def hooked_sql(q, *a, _crash=crash, _calls=calls, **kw):
-                if (
-                    _crash == "before_stage_drop"
-                    and _calls["n"] >= 2
-                    and q.lstrip().upper().startswith("DROP TABLE")
-                    and "compacting" in q
-                ):
-                    raise Killed()
-                return real_sql(q, *a, **kw)
-
-            skew.write_bucketed = hooked_write
-            spark.sql = hooked_sql
-            try:
-                compact_assignment_bucketed(spark, tbl, num_buckets=nb)
-                assert crash == "none"
-            except Killed:
-                assert crash != "none"
-            finally:
-                skew.write_bucketed = real_write
-                del spark.sql  # restore the class-bound method
-
-            # the conf toggled inside compact must be restored even on
-            # a crash (finally-block contract)
-            assert (
-                spark.conf.get(
-                    "spark.sql.sources.bucketing."
-                    "autoBucketedScan.enabled"
-                )
-                == "true"
-            )
-            # retry (the recovery path the next maintenance run takes)
-            compact_assignment_bucketed(spark, tbl, num_buckets=nb)
-            assert spark.catalog.tableExists(tbl)
-            assert not spark.catalog.tableExists(f"{tbl}_compacting")
-            assert len(spark.table(tbl).inputFiles()) <= nb
-            want = {
-                (r["id_a"], r["id_b"])
-                for r in semantic_near_dup_pairs(
-                    emb.filter(F.col("vec_id") < hi),
-                    cents, TAU, probes=3,
-                ).collect()
-            }
-            got = {
-                (r["id_a"], r["id_b"])
-                for r in semantic_near_dup_pairs_from_bucketed(
-                    spark, tbl, threshold=TAU
-                ).collect()
-            }
-            assert got == want
-        spark.sql(f"DROP TABLE IF EXISTS `{tbl}`")
-        loc = table_dir(tbl)
-        if os.path.isdir(loc):
-            shutil.rmtree(loc, ignore_errors=True)
-
-    run()
